@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
@@ -7,22 +6,37 @@ object Bench {
   private def fmt(v: Double): String = BigDecimal(v)
     .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
 
+  /** Runs one bench entry and prints its BENCHQ line: the seconds on
+   * success, `FAILED:<exception class>` on a throw. A failure returns
+   * Left and is never timed — a query that dies early must not read as
+   * a fast success. Per-query fan-out caches are released either way. */
+  private[graft] def timeQuery(name: String)(body: => Unit): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val failed = try { body; None }
+      catch { case t: Throwable => Some(t.getClass.getName) }
+      finally CacheScope.releaseAll()
+    val r = failed.toLeft((System.nanoTime() - t0) / 1e9)
+    println(s"BENCHQ $name ${r.fold("FAILED:" + _, fmt)}")
+    r
+  }
+
+  /** The totals JSON: `value` sums only the entries that succeeded;
+   * `n` counts every entry, `n_failed`/`failed` name the ones that
+   * threw. With `perQuery`, also the full per-entry seconds map. */
+  private[graft] def summary(results: Seq[(String, Either[String, Double])],
+      sfDir: String, perQuery: Boolean): String = {
+    val ok = results.collect { case (k, Right(v)) => k -> v }
+    val failed = results.collect { case (k, Left(_)) => "\"" + k + "\"" }
+    val qs = if (!perQuery) "" else ok.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString(",\"queries\":{", ",", "}")
+    s"""{"metric":"total","value":${fmt(ok.map(_._2).sum)},"unit":"sec",""" +
+      s""""n":${results.size},"n_failed":${failed.size},""" +
+      s""""failed":${failed.mkString("[", ",", "]")}$qs,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // A 100+-query session accumulates shuffle files and broadcasts that
-      // ContextCleaner only reclaims after a JVM GC — which a large heap
-      // rarely triggers on its own. Late queries then run against a machine
-      // whose disk/page cache is full of dead shuffle state (p18 measured
-      // 2.6x slower at query #95 than standalone). Periodic cleaner GC
-      // bounds that drift.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // pre-fault: pull every fixture parquet byte into the OS page cache
     // and log the cache level before/after. This box runs proactive
     // reclaim (kdamond) that pins buff/cache around ~3 GiB, so sweeps
@@ -71,10 +85,8 @@ object Bench {
     }
     // untimed spin-up: JVM/codegen/parquet-footer startup shouldn't be
     // attributed to whichever query happens to run first
-    try {
-      SparkEntry.prepare(spark)
-      spark.read.parquet(s"$sfDir/events.parquet").count()
-    } catch { case _: Throwable => }
+    try spark.read.parquet(s"$sfDir/events.parquet").count()
+    catch { case t: Throwable => println(s"BENCHW spinup FAILED=$t") }
     // TIMED, NAMED warmup: run-scoped shared derivations (the envelope
     // view ~80 queries start from; the LSH verified-pair relation p15/p18
     // consume). Charging them to an explicit "_warmup_shared" entry —
@@ -133,7 +145,6 @@ object Bench {
     // 6x swing on one query from ordering alone). Deterministic order
     // makes per-query timings comparable across rounds.
     val perQuery = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
       // noop sink, NOT count(): count() lets Catalyst prune every column,
       // so a projection-shaped query (regex redaction, quantization
       // arithmetic) would be measured as a row count of its input — the
@@ -141,30 +152,23 @@ object Bench {
       // their compute survived the count. The noop sink evaluates every
       // output column and discards the rows (the standard Spark
       // benchmarking sink).
-      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-      catch { case _: Throwable => () }
-      finally CacheScope.releaseAll() // free per-query fan-out caches
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(s"BENCHQ $name ${fmt(sec)}")
-      name -> sec
+      name -> timeQuery(name) {
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      }
     }
-    val results = ("_warmup_shared" -> warmupSec) +: perQuery
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val results = ("_warmup_shared" -> Right(warmupSec)) +: perQuery
     // The FULL summary (with the complete per-query map) always lands in
     // a file: at 286 entries the map alone is ~7.9 kB, far past any
     // bounded stdout tail capture.
-    val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
     try {
       val p = Paths.get(outPath)
       if (p.getParent != null) Files.createDirectories(p.getParent)
-      Files.write(p, (json + "\n").getBytes(StandardCharsets.UTF_8),
+      Files.write(p, (summary(results, sfDir, perQuery = true) + "\n")
+        .getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
         StandardOpenOption.WRITE)
-    } catch { case _: Throwable => }
+    } catch { case t: Throwable => println(s"BENCHW write $outPath FAILED=$t") }
     // The final stdout line is a SHORT totals-only JSON. Rationale (r20
     // verdict item 1): the driver keeps only the last ~2000 chars of
     // stdout, so a final line carrying the full 286-entry map has been
@@ -173,7 +177,7 @@ object Bench {
     // leaves the tail budget to the per-query BENCHQ lines above, which
     // are the machine-readable per-query record the tail can actually
     // hold. The full map stays durable in target/bench.json (above).
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"$sfDir"}""")
+    println(summary(results, sfDir, perQuery = false))
     CacheScope.releaseRun()
     spark.stop()
   }

@@ -48,7 +48,7 @@ object CacheScope {
    * traded deliberately against the r16 alternative (unpersist + hand
    * back an uncached plan), which left a raced caller permanently
    * recomputing a 38 s-class lineage with no signal. Every harness here
-   * (Verify/Bench/StreamingSmoke mains, the per-JVM test walk) is
+   * (the Verify/Bench mains, the per-JVM test run) is
    * sequential — builders complete before their end-of-run releaseRun —
    * and a long-lived embedding caller should either arrange the same or
    * call releaseRun() once more after quiescence. */

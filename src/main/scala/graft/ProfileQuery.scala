@@ -1,27 +1,23 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
 
-/** Driver-side profiling harness (the Profile* family): runs the named
- * declared queries through the Bench methodology (noop sink, per-query
- * CacheScope release) with a SparkListener that prints one line per JOB
- * (duration, stage/task counts, call site) so a slow query's wall can be
- * attributed to a specific derivation without re-instrumenting the
- * operator. Repeats each query `SPARK_GRAFT_REPS` times (default 1) —
- * second runs isolate run-scoped memo effects from per-query cost. */
+/** Driver-side profiling harness: runs the named declared queries
+ * through the Bench methodology (noop sink, per-query CacheScope
+ * release) with a SparkListener that prints one line per JOB (duration,
+ * stage/task counts, call site) so a slow query's wall can be attributed
+ * to a specific derivation without re-instrumenting the operator.
+ * Repeats each query `SPARK_GRAFT_REPS` times (default 1) — second runs
+ * isolate run-scoped memo effects from per-query cost. The TOTAL line
+ * carries the output row count, observed on the noop write itself (no
+ * extra job), so a degenerate result set shows next to its wall. */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prepare(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
 
     @volatile var jobInfo = Map.empty[Int, (Long, String, Int)] // start, site, nStages
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -59,9 +55,12 @@ object ProfileQuery {
       val fn = SparkEntry.queries(name)
       println(s"===== $name (rep $rep) =====")
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      val rows = Observation()
+      fn(spark, sfDir).observe(rows, count(lit(1)).as("n"))
+        .write.mode("overwrite").format("noop").save()
       CacheScope.releaseAll()
-      println(f"TOTAL $name ${(System.nanoTime() - t0) / 1e9}%.3f s (rep $rep)")
+      println(f"TOTAL $name ${(System.nanoTime() - t0) / 1e9}%.3f s " +
+        s"rows=${rows.get("n")} (rep $rep)")
     }
     CacheScope.releaseRun()
     spark.stop()

@@ -1208,8 +1208,13 @@ object CorpusOps {
         .join(hist.withColumn("b", shiftright(col("v"), 16)),
           Seq("source"))
         .where(col("b") === col("tb"))
+        // one window partition per requested quantile: q is rounded to
+        // 4 dp, so two rationals can share it with different ranks (1/3
+        // and 3333/10000) — keyed by q alone, their target-bucket rows
+        // would mix into one running sum
         .withColumn("cum", col("below") + sum(col("c")).over(
-          Window.partitionBy(col("source"), col("q")).orderBy(col("v"))))
+          Window.partitionBy(col("source"), col("q"), col("rank"))
+            .orderBy(col("v"))))
         .where(col("cum") >= col("rank"))
         .groupBy(col("source"), col("q"), col("n"), col("rank"))
         .agg(min(col("v")).as("value"))

@@ -408,8 +408,9 @@ object DedupOps {
    * and lower-id batch siblings. Under the intended monotone-id ingest
    * order every appended member is lower-id than the arriving batch, so
    * the accumulated step verdicts equal the one-shot
-   * [[minhashAppendVerdicts]] relation row for row (streaming check 30
-   * asserts exactly that). Under OUT-of-order arrival — a later batch
+   * [[minhashAppendVerdicts]] relation row for row (StreamingSpec
+   * "minhash-append-stream" asserts exactly that). Under OUT-of-order
+   * arrival — a later batch
    * carrying a lower id — the inter-batch duplicate is still caught,
    * billed to the later ARRIVAL (whose verdict row then names a
    * higher-id `dup_of` partner); that diverges from the one-shot

@@ -224,7 +224,8 @@ object Hnsw {
    * as a single chain (same union rationale as [[levelEdgesAllD]]).
    * ONE definition consumed by both the one-shot [[appendAudit]] and
    * the persisted-table path ([[appendEdgeRows]]), preserving the
-   * row-for-row parity StreamingSmoke check 39 requires. */
+   * row-for-row parity StreamingSpec "hnsw-append-table-restart"
+   * requires. */
   def newToBaseEdgesAllD(batchNodes: DataFrame, baseNodes: DataFrame,
       qcents: DataFrame, maxLevel: Int, m: Int, cellAdj: Int): DataFrame = {
     val adjAll = cellAdjacencyAll(qcents, maxLevel, cellAdj)
@@ -546,7 +547,8 @@ object Hnsw {
   // ANY split of the batch rows equals the one-shot [[appendAudit]]
   // graph row for row, and [[auditFromTables]] over the grown tables
   // equals the one-shot audit relation exactly — the equality
-  // StreamingSmoke check 34ff asserts across a mid-stream restart.
+  // StreamingSpec "hnsw-append-table-restart" asserts across a
+  // mid-stream restart.
   // ------------------------------------------------------------------
 
   /** Node-table rows for `vecs` against frozen centroids: e3 codes, the
@@ -585,8 +587,8 @@ object Hnsw {
    * node TABLE (via baseNodes), so materialize (localCheckpoint) before
    * appending it to the edge table. The selection is
    * [[newToBaseEdgesAllD]] — the SAME definition [[appendAudit]]
-   * consumes, so the graphs stay row-for-row identical (StreamingSmoke
-   * check 39). */
+   * consumes, so the graphs stay row-for-row identical (StreamingSpec
+   * "hnsw-append-table-restart"). */
   def appendEdgeRows(baseNodes: DataFrame, batchNodes: DataFrame,
       qcents: DataFrame, maxLevel: Int, m: Int, cellAdj: Int): DataFrame = {
     val newOut = newToBaseEdgesAllD(batchNodes, baseNodes, qcents,

@@ -188,7 +188,8 @@ object Sketches {
   /** The HLL register relation: (source, idx, r) with r = max ρ seen for
    * that register. This IS the sketch — mergeable by the same groupBy-max
    * (a streaming Complete-mode aggregation over it converges to the batch
-   * registers, checked by StreamingSmoke), m rows per group. */
+   * registers, checked by StreamingSpec "hll-registers"), m rows per
+   * group. */
   def hllRegisters(df: DataFrame, group: Column, valueHash60: Column,
       b: Int = 6): DataFrame = {
     require(b >= 4 && b <= 16, s"HLL needs 4 <= b <= 16, got $b")

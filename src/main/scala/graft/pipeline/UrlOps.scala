@@ -103,8 +103,9 @@ object UrlOps {
   }
 
   /** The crawl-frontier base relation shared by the batch census
-   * (p127) and its streaming twin (check 31): one row per doc with its
-   * text size and the canonicalized URL + host derived from `rawUrl`.
+   * (p127) and its streaming twin (StreamingSpec "url-census-stream"):
+   * one row per doc with its text size and the canonicalized URL + host
+   * derived from `rawUrl`.
    * Extracted so the two consumers cannot drift — the fixture
    * generator already lives in hand-aligned copies; the derivation
    * must not. */

@@ -441,9 +441,9 @@ object LogQueries extends QueryGroup {
 
   private val s3 = QueryDef(
     // S3 — the consumer receive loop as a batch twin (the streaming
-    // cursor-restart semantics live in StreamingSmoke's `subscription`
-    // check): per (topic, partition), with the subscription cursor at
-    // mid-stream, receive the next ≤100 messages in offset order
+    // cursor-restart semantics live in StreamingSpec "subscription"):
+    // per (topic, partition), with the subscription cursor at mid-stream,
+    // receive the next ≤100 messages in offset order
     // (receiverQueueSize), advance the read position past the last
     // received, and report the backlog left behind — the
     // receive → ack → cursor-advance contract, oracle-checked.
@@ -587,9 +587,10 @@ object LogQueries extends QueryGroup {
     // round (incomplete), stripes with n%13 ∈ {11,12} complete past the
     // 10 s timeout (timed_out), the rest complete. The hand 29-row
     // fixture remains the spec/streaming pin (ReplicatedSubscriptionSpec,
-    // smoke 28). The oracle replays every rule over the same generated
-    // relation — first-response-wins storage, two-round completion, the
-    // timeout gate, and the running-max UPDATE fold — not pinned answers.
+    // StreamingSpec "repl-sub-census"). The oracle replays every rule
+    // over the same generated relation — first-response-wins storage,
+    // two-round completion, the timeout gate, and the running-max UPDATE
+    // fold — not pinned answers.
     (s, d) => {
       val e = env(s, d)
       // the snapshot-id relation feeds all five marker branches plus the

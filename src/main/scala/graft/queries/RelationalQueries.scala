@@ -1755,7 +1755,8 @@ object RelationalQueries extends QueryGroup {
    * engine's lag + running-sum windows share ONE user-key exchange and
    * fuse into a single Window operator ([[Sessionize]]); the roll-up is
    * a co-partitioned hash agg — no second event shuffle. The streaming
-   * twin (StreamingSmoke) converges to this SAME relation. */
+   * twin (StreamingSpec "sessionizer-q34") converges to this SAME
+   * relation. */
   private val q34 = QueryDef(
     (s, d) => Sessionize.sessions(
       EventLog.raw(s, d).select(col("user_id"), col("event_id"),

@@ -33,8 +33,8 @@ final case class RsSnapState(reqTs: Long,
  * snapshot's CURRENT census row (completed / timed_out / incomplete by
  * the same completion-vs-request-time rule the batch fold applies). The
  * converged max-version rows equal the batch census — proven by
- * StreamingSmoke check 28, including snapshots whose two response rounds
- * straddle a micro-batch boundary.
+ * StreamingSpec "repl-sub-census", including snapshots whose two
+ * response rounds straddle a micro-batch boundary.
  */
 object ReplSubStream {
 

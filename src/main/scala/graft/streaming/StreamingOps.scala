@@ -24,17 +24,21 @@ case class DocIngest(doc_id: Long, fp: String)
 /** One streamed funnel event (user, type, event-time ms). */
 case class FunnelEvent(user_id: Long, event_type: String, ms: Long)
 
-/** One per-user event for the streaming sessionizer (check 24). */
+/** One per-user event for the streaming sessionizer
+ * (StreamingSpec "sessionizer-q34"). */
 case class SessEvent(user_id: Long, event_id: Long, ms: Long)
 
-/** One per-user typed event for the streaming Markov census (check 25). */
+/** One per-user typed event for the streaming Markov census
+ * (StreamingSpec "markov-census"). */
 case class TypedEvent(user_id: Long, event_id: Long, ms: Long,
     event_type: String)
 
-/** One observed transition from the streaming Markov census (check 25). */
+/** One observed transition from the streaming Markov census
+ * (StreamingSpec "markov-census"). */
 case class Transition(user_id: Long, from_type: String, to_type: String)
 
-/** One scored row for the streaming weighted sampler (check 26). */
+/** One scored row for the streaming weighted sampler
+ * (StreamingSpec "weighted-sampler"). */
 case class SampleCand(stratum: String, doc_id: Long, ky: Double, w: Double)
 
 /** The streaming sampler's current selection for a stratum — upsert
@@ -440,8 +444,8 @@ object StreamingOps {
    * CONTRACT: events must arrive per-user in non-decreasing event-time
    * order for the incremental chain to equal the batch minimums (a late
    * earlier signup could re-anchor the whole chain). Production gets
-   * that ordering from a watermark + in-batch sort; the smoke check
-   * feeds time-sorted chunks and asserts convergence to the batch
+   * that ordering from a watermark + in-batch sort; StreamingSpec
+   * "funnel-state" feeds time-sorted chunks and asserts convergence to the batch
    * relation.
    */
   def funnelStream(ev: Dataset[FunnelEvent]): Dataset[FunnelUser] = {
@@ -524,7 +528,7 @@ object StreamingOps {
    * in non-decreasing event-time order; production gets that from a
    * watermark + in-batch sort. In production the per-user state would
    * use an idle [[GroupStateTimeout]] of `gapMs` to retire closed
-   * sessions; the smoke fixture is finite so no timeout fires.
+   * sessions; the test fixture is finite so no timeout fires.
    */
   def sessionStream(ev: Dataset[SessEvent], gapMs: Long): Dataset[SessRow] = {
     import ev.sparkSession.implicits._

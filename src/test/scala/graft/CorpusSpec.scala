@@ -490,6 +490,21 @@ class CorpusSpec extends AnyFunSuite {
     assert(one === two, "single-level and two-level selection diverged")
   }
 
+  test("two-level quantiles keep apart rationals that round to one q") {
+    // 1/3 and 3333/10000 both round to q = 0.3333, but over n = 10,000
+    // their ranks are 3334 and 3333, and both land in value bucket 0:
+    // the within-bucket running sum must not mix the two selections
+    val hist = spark.range(10000)
+      .select(lit("s").as("source"), col("id").as("v"), lit(1L).as("c"))
+    val qs = Seq((1, 3), (3333, 10000))
+    val one = CorpusOps.exactQuantilesOver(hist, qs, twoLevel = false)
+      .collect().map(_.toSeq).toSet
+    val two = CorpusOps.exactQuantilesOver(hist, qs, twoLevel = true)
+      .collect().map(_.toSeq).toSet
+    assert(one.size === 2)
+    assert(one === two, "single-level and two-level selection diverged")
+  }
+
   test("LM perplexity: hand-computed bigram scores, OOV and keep flag") {
     import spark.implicits._
     // train: words [a b a b a]; bigrams {a b:2, b a:2}; unigrams a:3 b:2; V=2

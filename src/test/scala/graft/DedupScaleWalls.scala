@@ -24,16 +24,7 @@ object DedupScaleWalls {
     // rows, and walls filed from a 4-core 4-partition config would
     // measure the test harness, not the operator (the r18 review-pass
     // finding — the first 100× filing ran 8× under machine throughput).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dedup-walls")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prepare(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     println(s"[walls] corpus=$dir docs=${docs.count()}")
     // LAZY and only tracked when an unstaged stage runs: persist()

@@ -83,16 +83,7 @@ object SamplingScaleWalls {
   def main(args: Array[String]): Unit = {
     val tiers = if (args.nonEmpty) args.toSeq
       else Seq("dir:/root/testdata/sf0.1", "synth:1000000", "synth:10000000")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sampling-scale-walls")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prepare(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
 
     tiers.foreach { tier =>
       val (label, docs) = tier.split(':') match {

@@ -4,7 +4,7 @@ import graft.operators.Sessionize
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gap-based sessionization (q34 + StreamingSmoke check 24): the gap
+/** Gap-based sessionization (q34 + StreamingSpec "sessionizer-q34"): the gap
  * boundary is INCLUSIVE (gap == gapMs stays in the session, gap ==
  * gapMs + 1 splits), session indices are 1-based per user in time order,
  * ties on ms break on event_id, and the lag + running-sum windows fuse

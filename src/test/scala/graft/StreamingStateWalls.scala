@@ -8,20 +8,21 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Scale rehearsal for the STREAMING-STATE half of the scale story —
  * the stateful families' first measured rows (state-store size,
- * per-batch wall) beyond the sf0.001 smoke gate, the way every batch
- * headliner has 10×/100× rows in PLAN_AUDIT:
+ * per-batch wall) beyond the sf0.001 StreamingSpec gate, the way every
+ * batch headliner has 10×/100× rows in PLAN_AUDIT:
  *
- *  - gap sessionizer (check 24 / q34's twin): per-key state is 4 longs,
- *    so state ROWS track the USER dimension, not the event stream —
- *    the telemetry must show numRowsTotal flat at |users| while input
- *    rows scale 10×/100×.
- *  - crawl-frontier census (check 31 / p127's twin): per-key state is
- *    the host's distinct-URL histogram — the one NON-O(1) per-key
- *    family, REFUSE-bounded by maxUrlsPerHost since r19; telemetry
- *    shows state bytes tracking the distinct-URL space.
- *  - LSH ingest (check 32's deployed shape): state is the parquet index
- *    TABLE, not a state store — telemetry is per-batch append wall and
- *    index growth, plus the one-shot batch wall for comparison.
+ *  - gap sessionizer (StreamingSpec "sessionizer-q34" / q34's twin):
+ *    per-key state is 4 longs, so state ROWS track the USER dimension,
+ *    not the event stream — the telemetry must show numRowsTotal flat
+ *    at |users| while input rows scale 10×/100×.
+ *  - crawl-frontier census (StreamingSpec "url-census-stream" / p127's
+ *    twin): per-key state is the host's distinct-URL histogram — the
+ *    one NON-O(1) per-key family, REFUSE-bounded by maxUrlsPerHost;
+ *    telemetry shows state bytes tracking the distinct-URL space.
+ *  - LSH ingest (StreamingSpec "minhash-append-index-table-restart"'s
+ *    deployed shape): state is the parquet index TABLE, not a state
+ *    store — telemetry is per-batch append wall and index growth, plus
+ *    the one-shot batch wall for comparison.
  *
  * The streaming legs run REAL streaming queries over a file source
  * (time-range-sliced parquet so the sessionizer's per-user order
@@ -99,19 +100,10 @@ object StreamingStateWalls {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val legs = args.lift(1).map(_.split(',').toSet)
       .getOrElse(Set("sess", "url", "lsh", "txn", "cw", "delay", "kv"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-streaming-state-walls")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prepare(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     import spark.implicits._
 
-    // ---------------- gap sessionizer (check 24 / q34) ----------------
+    // ----------------- gap sessionizer (sessionizer-q34) ---------------
     if (legs("sess")) {
       val events = graft.model.EventLog.raw(spark, dir)
         .select(col("user_id"), col("event_id"),
@@ -146,7 +138,7 @@ object StreamingStateWalls {
       Scratch.rm(srcDir); Scratch.rm(out)
     }
 
-    // ------------- crawl-frontier census (check 31 / p127) ------------
+    // ---------- crawl-frontier census (url-census-stream / p127) -------
     if (legs("url")) {
       val urlBase = graft.pipeline.UrlOps.frontierBase(
           spark.read.parquet(s"$dir/documents.parquet"),
@@ -186,7 +178,7 @@ object StreamingStateWalls {
       Scratch.rm(srcDir); Scratch.rm(out)
     }
 
-    // ------------- LSH ingest, deployed table shape (check 32) ---------
+    // ---- LSH ingest, deployed table shape (minhash-append-index-table-restart)
     if (legs("lsh")) {
       val allDocs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
@@ -271,7 +263,7 @@ object StreamingStateWalls {
     lazy val envelope = graft.model.EventLog.asTopic(
       graft.model.EventLog.raw(spark, dir))
 
-    // ------------- txn buffer (T3 / StreamingSmoke check 41) -----------
+    // ------------- txn buffer (T3 / txn-buffer-restart) ----------------
     // Per-key bound: the OPEN transaction's own backlog — drains to a
     // 3-field tomb at the terminal marker; state ROWS track txn ids.
     // Fixed-size lifecycle fixture: every txn group gets ONE terminal
@@ -335,7 +327,7 @@ object StreamingStateWalls {
       Scratch.rm(srcDir); Scratch.rm(out)
     }
 
-    // ---------- count windows (W3/W5 / StreamingSmoke check 36) --------
+    // ---------- count windows (W3/W5 / count-window-restart) -----------
     // Per-key bound: one Long window counter + at most n−1 pending
     // values — state ROWS track the KEY dimension (ScaleGen holds users
     // fixed while events scale), state bytes ≤ keys × n.
@@ -375,7 +367,7 @@ object StreamingStateWalls {
       Scratch.rm(srcDir); Scratch.rm(out)
     }
 
-    // ---------- delayed delivery (F3/F4 / StreamingSmoke check 42) -----
+    // ------- delayed delivery (F3/F4 / delayed-delivery-restart) -------
     // Per-key bound: one Long clock + the not-yet-due hold buffer per
     // PARTITION (4 keys); the hold mass is the deliver-ahead horizon
     // (≤ 4 minutes of publish time here), not the corpus.
@@ -408,7 +400,7 @@ object StreamingStateWalls {
       Scratch.rm(srcDir); Scratch.rm(out)
     }
 
-    // ------- A6 counters + A7 byte KV state (checks 34 and 48) ---------
+    // -- A6 counters + A7 byte KV state (counters-/byte-state-restart) --
     // Per-key bound: A6 one Long per key (topic), A7 one opaque 8-byte
     // value per key — state ROWS track keys, bytes are constant per key.
     // Update-mode emissions land via foreachBatch appends (file sinks

@@ -5,13 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One shared local session for all specs (Spark startup dominates test
  * time otherwise). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   /** Envelope rows from compact tuples: (offset, producer, seq, key, value,
    * eventMs, tombstone, marker). Fills the remaining envelope columns with

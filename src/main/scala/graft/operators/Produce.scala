@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -94,29 +95,28 @@ object Produce {
    * All-keyed fast path: when every row is keyed (a keyed producer's
    * batch, the reference's common case), the route is key-pure, so BOTH
    * sequences — global `_g` and per-partition `_entry` — derive from ONE
-   * cached (partition, block) count summary: two broadcast offset joins
-   * and two partitioned window passes over a single scan of the batch,
-   * instead of the two-round chain the keyless router forces.
+   * (block, partition) count summary: two windows over that summary give
+   * each (block, partition) its offsets, one broadcast join carries them
+   * to the rows, and two partitioned row windows number the rows — a
+   * single scan of the batch instead of the two-round chain the keyless
+   * router forces.
    */
   private def buildKeyedSequences(withBlk: DataFrame, numPartitions: Int,
       orderCol: String): DataFrame = {
     val routed = withBlk.withColumn("_pt", keyHashPartition(col("key"), numPartitions))
-    val summary = graft.CacheScope.track(
-      routed.groupBy(col("_blk"), col("_pt"))
-        .agg(count(lit(1)).as("_n")))
-    val gOff = Sequencing.exclusiveBlockPrefix(
-      summary.groupBy(col("_blk")).agg(sum(col("_n")).as("_val")),
-      Seq.empty, "_blk", isMax = false, desc = false, "_gpfx", persistInput = false)
-    val pOff = Sequencing.exclusiveBlockPrefix(
-      summary.select(col("_pt"), col("_blk"), col("_n").as("_val")),
-      Seq("_pt"), "_blk", isMax = false, desc = false, "_ppfx", persistInput = false)
-    val wG = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_blk")).orderBy(col(orderCol))
-    val wP = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_pt"), col("_blk")).orderBy(col(orderCol))
-    // Both offset relations are block-count-sized; pre-joining them on _blk
-    // means the batch pays ONE broadcast join instead of two.
-    val offs = pOff.join(gOff.select(col("_blk"), col("_gpfx")), Seq("_blk"))
+    // rows of all earlier blocks (every partition), and rows of earlier
+    // blocks in the same partition
+    val earlierBlocks = Window.orderBy(col("_blk"))
+      .rangeBetween(Window.unboundedPreceding, -1)
+    val earlierInPartition = Window.partitionBy(col("_pt")).orderBy(col("_blk"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offs = routed.groupBy(col("_blk"), col("_pt"))
+      .agg(count(lit(1)).as("_n"))
+      .select(col("_blk"), col("_pt"),
+        coalesce(sum(col("_n")).over(earlierBlocks), lit(0L)).as("_gpfx"),
+        coalesce(sum(col("_n")).over(earlierInPartition), lit(0L)).as("_ppfx"))
+    val wG = Window.partitionBy(col("_blk")).orderBy(col(orderCol))
+    val wP = Window.partitionBy(col("_pt"), col("_blk")).orderBy(col(orderCol))
     routed.join(broadcast(offs), Seq("_pt", "_blk"))
       .withColumn("_g", col("_gpfx") + row_number().over(wG) - 1)
       .withColumn("_entry", col("_ppfx") + row_number().over(wP) - 1)
@@ -155,8 +155,11 @@ object Produce {
   def appendDedup(spark: SparkSession, msgs: DataFrame, topicDir: String): Long = {
     val files = new java.io.File(topicDir).listFiles()
     val exists = files != null && files.nonEmpty
+    // the high-water needs two columns; a pinned schema also spares the
+    // schema-inference job an unschema'd parquet read runs on every call
     val toWrite =
-      if (exists) dedupAgainst(msgs, spark.read.parquet(topicDir))
+      if (exists) dedupAgainst(msgs,
+        spark.read.schema("producer_name STRING, sequence_id BIGINT").parquet(topicDir))
       else Dedup.dropReplays(msgs)
     // single evaluation: the accepted-count (the producer's ack) rides the
     // durable write as an observed metric, so the dedup plan never runs a

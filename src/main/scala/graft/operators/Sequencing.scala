@@ -11,77 +11,39 @@ import org.apache.spark.sql.functions._
  * message of a key through one task — dead at 100 TB when the key is
  * `topic` (a handful of values), and Catalyst folds a CONSTANT key away
  * entirely ("No Partition Defined" = the whole input in one task). These
- * helpers compute running quantities in levels that are all partitioned:
+ * helpers compute running quantities in two levels:
  *
- *   1. the expensive window runs inside (key, block) — high-cardinality,
- *      parallel, already clustered in storage (block = ledger);
- *   2. per-block summaries (|blocks| rows, 1/blockSize of the log) fold
- *      within `bucketWidth`-sized block ranges — windows partitioned by
- *      (key, bucket), still parallel even for one hot key;
- *   3. only bucket totals — |blocks|/bucketWidth rows, ~100 rows for
- *      100 TB of log at 1k-entry ledgers and 2^20-block buckets — pay one
- *      window per key over that ~100-row relation: the single-task window
- *      holds exactly the rows a broadcast of the totals would have shipped
- *      to every executor anyway, at a third of the exchanges.
+ *   1. the expensive row window runs inside (key, block) — high-
+ *      cardinality, parallel, already clustered in storage
+ *      (block = ledger);
+ *   2. the per-block summary — one row per (key, block), 1/blockSize of
+ *      the log — pays one exclusive window per key, and the result joins
+ *      back to the rows on (key, block), which AQE broadcasts when small.
  *
- * The summary join back to the log is an equi-join on (key, block), which
- * AQE broadcasts when small.
+ * The bound: one task per key holds rows/blockSize summary rows — about
+ * 10^8 for a 100 TB topic at 1k-entry ledgers, tens of bytes each — and
+ * never a message row.
  */
 object Sequencing {
 
-  private val BucketWidth = 1L << 20
-
   /**
    * Exclusive prefix fold of `_val` over earlier (later when `desc`)
-   * blocks of the same key — the level-2/3 machinery above. Input:
-   * one row per (key, block) with a `_val` column; output: those rows
-   * plus `outCol` = fold of all strictly earlier blocks' `_val`
-   * (null when there are none).
+   * blocks of the same key — level 2 above. Input: one row per
+   * (key, block) with a `_val` column; output: those rows plus `outCol`
+   * = fold of all strictly earlier blocks' `_val` (a max is null and a
+   * sum 0 when there are none).
    */
   private[operators] def exclusiveBlockPrefix(blocks: DataFrame, keyCols: Seq[String],
       blockCol: String, isMax: Boolean, desc: Boolean, outCol: String,
-      persistInput: Boolean = true, keepVal: Boolean = false): DataFrame = {
-    val grp = (keyCols :+ "_bkt").map(col)
-    // The summary is referenced by three downstream branches (in-bucket
-    // window, bucket totals, earlier-buckets broadcast); without a cache
-    // each branch re-aggregates the full log. Persisting it is the
-    // reference broker's ManagedLedger metadata table: one small row per
-    // (key, ledger) — ~1e8 rows × tens of bytes even at 100 TB — and
-    // Spark's CacheManager dedupes identical plans across repeated calls.
-    // Callers whose `blocks` already reads a cache pass persistInput=false.
-    val bucketed = blocks.withColumn("_bkt", floor(col(blockCol) / BucketWidth))
-    val withBkt =
-      if (persistInput) graft.CacheScope.track(bucketed)
-      else bucketed
+      keepVal: Boolean = false): DataFrame = {
     val ord = if (desc) col(blockCol).desc else col(blockCol).asc
-    val inW = Window.partitionBy(grp: _*).orderBy(ord)
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(ord)
       .rowsBetween(Window.unboundedPreceding, -1)
-    def fold(c: Column) = if (isMax) max(c) else sum(c)
-    val withIn = withBkt.withColumn("_pfx_in", fold(col("_val")).over(inW))
-    val totals = withBkt.groupBy(grp: _*).agg(fold(col("_val")).as("_bval"))
-    // Prefix over buckets of the same key: a window partitioned by the key
-    // alone. Unpartitioned/single-task is fine HERE — its input is the
-    // bucket-totals relation (~100 rows per key at 100 TB), the same tiny
-    // set the former broadcast non-equi join shipped whole to every task.
-    val ordBkt = if (desc) col("_bkt").desc else col("_bkt").asc
-    val bw = Window.partitionBy(keyCols.map(col): _*).orderBy(ordBkt)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bucketPrefix = totals
-      .withColumn("_pfx_bkt", fold(col("_bval")).over(bw))
-      .drop("_bval")
-    val combined =
-      if (isMax) greatest(
-        coalesce(col("_pfx_in"), lit(Long.MinValue)),
-        coalesce(col("_pfx_bkt"), lit(Long.MinValue)))
-      else coalesce(col("_pfx_in"), lit(0L)) + coalesce(col("_pfx_bkt"), lit(0L))
-    val asNull =
-      if (isMax) when(combined === Long.MinValue, lit(null)).otherwise(combined)
-      else combined
-    val dropped = if (keepVal) Seq("_bkt", "_pfx_in", "_pfx_bkt")
-      else Seq("_bkt", "_pfx_in", "_pfx_bkt", "_val")
-    withIn.join(bucketPrefix, keyCols :+ "_bkt")
-      .withColumn(outCol, asNull)
-      .drop(dropped: _*)
+    val prefix =
+      if (isMax) max(col("_val")).over(w)
+      else coalesce(sum(col("_val")).over(w), lit(0L))
+    val out = blocks.withColumn(outCol, prefix)
+    if (keepVal) out else out.drop("_val")
   }
 
   /**
@@ -114,7 +76,7 @@ object Sequencing {
    * Exclusive running max of `valueExpr` per key in (blockCol, orderCol)
    * order — the watermark shape: for each row, the max over all strictly
    * earlier rows of its key. Within-block exclusive max combined with the
-   * bucketed prefix max of all earlier blocks.
+   * prefix max of all earlier blocks.
    */
   def keyedRunningMaxExcl(env: DataFrame, keyCols: Seq[String], blockCol: String,
       orderCol: String, valueExpr: Column, outCol: String): DataFrame = {
@@ -158,8 +120,8 @@ object Sequencing {
 
   /**
    * Newest-first running sum of `valueExpr` per key (retention-style
-   * cumulative size): within-block running sum + the bucketed prefix
-   * total of all newer blocks.
+   * cumulative size): within-block running sum + the prefix total of all
+   * newer blocks.
    */
   def keyedCumSumDesc(env: DataFrame, keyCols: Seq[String], blockCol: String,
       orderCol: String, valueExpr: Column, outCol: String): DataFrame = {

@@ -43,6 +43,17 @@ class DedupSpec extends AnyFunSuite {
     assert(once.count() === twice.count())
   }
 
+  test("appendDedup keeps every fresh row when a partition rolls ledgers") {
+    // 4000 entries in 2 partitions: at least one partition rolls a
+    // 1000-entry ledger, so (ledger_id, msg_offset) is not msg_offset order
+    val dir = Scratch.freshDir("dedup-ledger-roll")
+    try {
+      val batch = keyedBatch(4000, 2)
+      assert(operators.Produce.appendDedup(spark, batch, dir) === 4000L)
+      assert(operators.Produce.appendDedup(spark, batch, dir) === 0L)
+    } finally Scratch.rm(dir)
+  }
+
   test("Manku block index finds exactly the brute-force Hamming pairs") {
     import TestSpark.spark
     import spark.implicits._

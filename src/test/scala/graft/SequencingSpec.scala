@@ -8,10 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * The two-level Sequencing helpers must equal the naive single-window
  * formulation they replace (the one that is scale-hostile but obviously
- * correct). Randomized rows with seeded RNG; block ids deliberately span
- * multiple 2^20 buckets so the level-3 bucket-prefix machinery (not just
- * the within-block window) is exercised, and a constant-key set guards
- * the "Catalyst folds constant partition keys away" regression.
+ * correct). Randomized rows with seeded RNG; block ids are sparse and far
+ * apart (0, 1, 2, B, B + 1, 3B) so the per-key block prefix must not
+ * assume contiguous blocks, and a constant-key set guards the "Catalyst
+ * folds constant partition keys away" regression.
  */
 class SequencingSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -56,6 +56,17 @@ class SequencingSpec extends AnyFunSuite {
           .orderBy(col("blk"), col("ord"))
           .rowsBetween(Window.unboundedPreceding, -1)))
       assert(rows(fast, "wm").toSeq === rows(naive, "wm").toSeq)
+    }
+
+    test(s"keyedCumSumExcl == naive exclusive running sum ($tag)") {
+      val df = data(5, constantKey)
+      val fast = Sequencing.keyedCumSumExcl(df, Seq("key"), "blk", "ord",
+        col("v"), "cum")
+      val naive = df.withColumn("cum",
+        coalesce(sum(col("v")).over(Window.partitionBy(col("key"))
+          .orderBy(col("blk"), col("ord"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      assert(rows(fast, "cum").toSeq === rows(naive, "cum").toSeq)
     }
 
     test(s"keyedCumSumDesc == naive newest-first running sum ($tag)") {

@@ -7,6 +7,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(4)
 
+  /** A keyed producer batch of `rows` messages (keys k0..k6) built for
+   * `partitions` partitions, offsets and sequence ids from `start`. */
+  def keyedBatch(rows: Int, partitions: Int, start: Long = 0L): DataFrame = {
+    import spark.implicits._
+    val raw = (0 until rows).map(i => (i.toLong, s"k${i % 7}", i.toDouble))
+      .toDF("ord", "key", "value")
+    graft.operators.Produce.build(raw, "t", "p", partitions, "ord", 0L,
+      startOffset = start, startSeq = start, allKeyed = true)
+  }
+
   /** Envelope rows from compact tuples: (offset, producer, seq, key, value,
    * eventMs, tombstone, marker). Fills the remaining envelope columns with
    * deterministic derivations so any operator can run on the result. */

@@ -12,10 +12,16 @@ import org.apache.spark.sql.functions._
  * .java:96-210). The event-time variant retains the latest message by
  * event time instead of publish order (EventTimeOrderCompactor.java:67-72).
  *
- * Spark-first design: one-pass `max_by(struct, orderKey)` hash aggregation —
+ * Spark-first design: one-pass `max_by(struct, orderKey)` aggregation —
  * map-side partial aggregation keeps the shuffle at |keys| not |messages|,
  * which is the property that matters at 100 TB (a window/row_number
- * formulation would shuffle and sort every message instead).
+ * formulation would shuffle every message instead). A struct buffer is
+ * not fixed-width, so Spark plans it as a SortAggregate (each map task
+ * sorts its messages by key before the partial aggregate), not a hash
+ * aggregate. The struct stays: the envelope carries string and binary
+ * columns, which cannot take the hash path as per-column `max_by`s
+ * either. The streaming TableView, which keeps only fixed-width columns,
+ * takes them one by one and hashes (`StreamingOps.latestPerKeyDelta`).
  */
 object Compaction {
 

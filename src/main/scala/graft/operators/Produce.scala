@@ -153,8 +153,7 @@ object Produce {
    * (producer, sequence) pairs are rejected, like the broker's
    * isDuplicate check before asyncAddEntry. Returns appended count. */
   def appendDedup(spark: SparkSession, msgs: DataFrame, topicDir: String): Long = {
-    val files = new java.io.File(topicDir).listFiles()
-    val exists = files != null && files.nonEmpty
+    val exists = graft.sources.GraftIO.nonEmptyDir(spark, topicDir)
     // the high-water needs two columns; a pinned schema also spares the
     // schema-inference job an unschema'd parquet read runs on every call
     val toWrite =

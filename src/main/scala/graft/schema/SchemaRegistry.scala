@@ -158,7 +158,7 @@ final class PersistedSchemaRegistry(spark: SparkSession, path: String) {
     StructField("outcome", StringType, nullable = false)))
 
   private def readTable(dir: String, schema: StructType): DataFrame =
-    if (new java.io.File(dir).exists())
+    if (graft.sources.GraftIO.nonEmptyDir(spark, dir))
       spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 

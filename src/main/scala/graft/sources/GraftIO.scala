@@ -27,6 +27,15 @@ trait GraftSink[T] extends Serializable {
 
 object GraftIO {
 
+  /** Whether `dir` exists and holds at least one entry, asked of the
+   * path's own Hadoop `FileSystem`: a `file://`, `hdfs://` or `s3a://`
+   * table is seen the same way Spark's reader and writer see it. */
+  def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(path) && fs.listStatus(path).nonEmpty
+  }
+
   /** S9 — run a Source distributed: one task per source partition, the
    * open/read/close lifecycle per task (the connector contract). */
   def fromSource[T: Encoder](spark: SparkSession, source: GraftSource[T],

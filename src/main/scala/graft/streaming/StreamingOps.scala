@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.Exact
 import graft.model.MessageEnvelope
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -119,9 +119,12 @@ object StreamingOps {
 
   /**
    * A5 streaming — TableView over an envelope stream: distributed
-   * update-mode `max_by` per key keeps only changed keys per micro-batch;
+   * update-mode per-column `max_by` per key ([[latestPerKeyDelta]], a hash
+   * aggregate) keeps only changed keys per micro-batch;
    * foreachBatch applies the (key-sized) delta to the client map. Matches
-   * the batch Compaction.tableView on the same data.
+   * the batch Compaction.tableView on the same data, given one message
+   * per `msg_offset`. A checkpoint written while the aggregation state
+   * was one `struct` column cannot be resumed: start from a fresh one.
    *
    * Scale contract, enforced (the scaledPlanes discipline — a hard
    * REFUSE, not a silent cap): the client map is DRIVER-heap-resident,
@@ -199,16 +202,32 @@ object StreamingOps {
     (query, view)
   }
 
-  /** The shared update-mode latest-per-key delta behind both TableView
-   * sinks: only keys whose latest changed appear in each micro-batch. */
+  /**
+   * The shared update-mode latest-per-key delta behind both TableView
+   * sinks: only keys whose latest changed appear in each micro-batch.
+   *
+   * Each column is its own `max_by(_, msg_offset)` (and the offset its own
+   * `max`), so every aggregation buffer is fixed-width and Spark plans a
+   * codegen'd HashAggregate; a `max_by(struct, …)` buffer is not
+   * fixed-width and plans a SortAggregate that sorts every message by key.
+   * Precondition: `msg_offset` is unique per message within the topic, so
+   * the per-column picks all come from the same (latest) message.
+   *
+   * The state store holds these four columns per key. A checkpoint
+   * written while the state was one `struct` column cannot be resumed.
+   */
   private def latestPerKeyDelta(env: DataFrame): DataFrame =
-    env.filter(col("marker_type").isNull)
-      .groupBy(col("key"))
-      .agg(max_by(
-        struct(col("value"), col("publish_ms"), col("msg_offset"), col("tombstone")),
-        col("msg_offset")).as("m"))
-      .select(col("key"), col("m.value").as("value"), col("m.publish_ms").as("publish_ms"),
-        col("m.msg_offset").as("msg_offset"), col("m.tombstone").as("tombstone"))
+    latestByOffset(env.filter(col("marker_type").isNull), col("key"))
+
+  /** Latest (value, publish_ms, msg_offset, tombstone) per group, by
+   * `msg_offset`: one fixed-width aggregate per column (see
+   * [[latestPerKeyDelta]] for the unique-offset precondition). */
+  private def latestByOffset(rows: DataFrame, groups: Column*): DataFrame =
+    rows.groupBy(groups: _*).agg(
+      max_by(col("value"), col("msg_offset")).as("value"),
+      max_by(col("publish_ms"), col("msg_offset")).as("publish_ms"),
+      max(col("msg_offset")).as("msg_offset"),
+      max_by(col("tombstone"), col("msg_offset")).as("tombstone"))
 
   /**
    * A5 at data-plane scale — the compacted-TABLE sink: the same
@@ -217,11 +236,19 @@ object StreamingOps {
    * driver map, so the view's size is bounded by storage, not one heap.
    *
    * Per micro-batch the merge touches ONLY the buckets containing changed
-   * keys: read those buckets, fold in the delta (per-key max_by, tombstones
-   * delete), and dynamic-partition-overwrite exactly those buckets — the
-   * reference's TwoPhaseCompactor ledger rewrite
+   * keys: read those buckets, fold in the delta (the same per-column
+   * latest-by-offset hash aggregate as the delta; tombstones delete), and
+   * dynamic-partition-overwrite exactly those buckets — the reference's
+   * TwoPhaseCompactor ledger rewrite
    * (pulsar-broker/.../compaction/TwoPhaseCompactor.java) amortized per
    * batch. Work per batch is O(delta + touched buckets), never O(table).
+   * The merge is shuffled by `_bucket`, which also satisfies its
+   * `(_bucket, key)` grouping, so each touched bucket is rewritten by one
+   * task as one file. The unique-offset precondition of
+   * [[latestPerKeyDelta]] holds here too: a stored row and a delta row of
+   * one key carry different offsets. A checkpoint written while the
+   * aggregation state was one `struct` column cannot be resumed: start
+   * from a fresh checkpoint and table.
    */
   def compactedTableStream(env: DataFrame, checkpointDir: String,
       tableDir: String, numBuckets: Int = 64): StreamingQuery =
@@ -237,21 +264,14 @@ object StreamingOps {
           val touched = bucketed.select(col("_bucket")).distinct()
             .collect().map(_.getLong(0)).toSeq // ≤ numBuckets values
           if (touched.nonEmpty) {
-            val dirFile = new java.io.File(tableDir)
             val existing =
-              if (dirFile.exists() && dirFile.listFiles() != null &&
-                  dirFile.listFiles().nonEmpty)
+              if (graft.sources.GraftIO.nonEmptyDir(spark, tableDir))
                 spark.read.parquet(tableDir)
                   .filter(col("_bucket").isin(touched: _*))
               else bucketed.limit(0)
-            val merged = existing.unionByName(bucketed)
-              .groupBy(col("key"))
-              .agg(max_by(struct(col("value"), col("publish_ms"), col("msg_offset"),
-                col("tombstone"), col("_bucket")), col("msg_offset")).as("m"))
-              .select(col("key"), col("m.value").as("value"),
-                col("m.publish_ms").as("publish_ms"),
-                col("m.msg_offset").as("msg_offset"),
-                col("m.tombstone").as("tombstone"), col("m._bucket").as("_bucket"))
+            val merged = latestByOffset(
+                existing.unionByName(bucketed).repartition(col("_bucket")),
+                col("_bucket"), col("key"))
               // tombstones STAY in the stored table (the compacted ledger
               // keeps the latest delete marker too): dropping them here
               // could leave a touched bucket with zero output rows, and

@@ -54,6 +54,20 @@ class DedupSpec extends AnyFunSuite {
     } finally Scratch.rm(dir)
   }
 
+  test("appendDedup finds the high-water of a file:// topic") {
+    // whether the topic has data is asked of the path's Hadoop
+    // FileSystem: a java.io.File check sees nothing at a URI path, skips
+    // the high-water and appends every replay
+    val dir = Scratch.freshDir("dedup-file-uri")
+    val topic = s"file://$dir"
+    try {
+      val batch = keyedBatch(100, 2)
+      assert(operators.Produce.appendDedup(spark, batch, topic) === 100L)
+      assert(operators.Produce.appendDedup(spark, batch, topic) === 0L)
+      assert(spark.read.parquet(topic).count() === 100L)
+    } finally Scratch.rm(dir)
+  }
+
   test("Manku block index finds exactly the brute-force Hamming pairs") {
     import TestSpark.spark
     import spark.implicits._

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -22,21 +19,10 @@ class ProduceJobsSpec extends AnyFunSuite {
     try {
       operators.Produce.append(keyedBatch(1000, 4), dir)
       val batch = keyedBatch(1000, 4, start = 1000L)
-      val jobs = new AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      }
-      ListenerDrain.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      val accepted =
-        try operators.Produce.appendDedup(spark, batch, dir)
-        finally {
-          ListenerDrain.drain(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(listener)
-        }
+      val (accepted, jobs) = countingJobs(operators.Produce.appendDedup(spark, batch, dir))
       assert(accepted === 1000L)
-      info(s"appendDedup ran ${jobs.get} jobs")
-      assert(jobs.get <= 16)
+      info(s"appendDedup ran $jobs jobs")
+      assert(jobs <= 16)
     } finally Scratch.rm(dir)
   }
 }

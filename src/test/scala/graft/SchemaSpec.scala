@@ -52,6 +52,17 @@ class SchemaSpec extends AnyFunSuite {
       AlwaysIncompatible).isLeft)
   }
 
+  test("persisted registry reopens its catalog from a file:// path") {
+    val dir = Scratch.freshDir("schema-file-uri")
+    val path = s"file://$dir"
+    try {
+      val v0 = StructType(Seq(req("id", LongType)))
+      assert(new PersistedSchemaRegistry(TestSpark.spark, path)
+        .putSchemaIfAbsent("t", v0, Backward) === Right(0))
+      assert(new PersistedSchemaRegistry(TestSpark.spark, path).versions("t") === Vector(v0))
+    } finally Scratch.rm(dir)
+  }
+
   test("persisted registry agrees with the in-memory model across reopens") {
     // model-based check: drive BOTH registries through the same
     // deterministic pseudo-random evolution script, reopening the

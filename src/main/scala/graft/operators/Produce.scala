@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
  *
  * Spark-first: stamping is pure column arithmetic over a caller-named
  * order column, so ids are deterministic and reproducible (no
- * monotonically_increasing_id, no driver state); the per-partition entry
- * sequence and the global sequence use the two-level [[Sequencing]]
- * helpers, so no task ever sorts the whole batch; durability is the
- * Parquet append (the BookKeeper-quorum replacement).
+ * monotonically_increasing_id, no driver state); the global sequence and
+ * the per-partition entry sequence both come from one (block, route
+ * class) summary, so no task ever sorts the whole batch; durability is
+ * the Parquet append (the BookKeeper-quorum replacement).
  */
 object Produce {
 
@@ -30,26 +30,49 @@ object Produce {
    * optional properties). Keyed rows route murmur3(key) % n; keyless rows
    * round-robin on their global position. `deliverAfterMs` > 0 sets the
    * delayed-delivery timestamp (TypedMessageBuilder.deliverAfter).
+   *
+   * One route serves any mix of keyed and keyless rows. Each row is
+   * ranked within its block (`_r`, blocks are `ledgerSize` wide in
+   * `orderCol`) and given a route class: its key's hash partition, or
+   * `n + _r mod n` when keyless. A (block, class) count summary holds
+   * everything else: a window over earlier blocks gives the global
+   * offset `_gpfx`, which fixes a keyless class's partition
+   * (`pmod(_gpfx + _r, n)` is the same for every row of the class), and a
+   * window over earlier blocks of that partition gives `_ppfx`. One
+   * broadcast join carries both to the rows: `_g = _gpfx + _r`, and
+   * `_entry = _ppfx` + the row's rank within (partition, block).
+   *
+   * `allKeyed` is deprecated and ignored: every batch takes this route.
    */
   def build(batch: DataFrame, topic: String, producerName: String,
       numPartitions: Int, orderCol: String, nowMs: Long,
       startOffset: Long = 0L, startSeq: Long = 0L,
       deliverAfterMs: Long = 0L, ledgerSize: Long = 1000L,
+      @deprecated("every batch takes the one route; the flag is ignored", "0.1.0")
       allKeyed: Boolean = false): DataFrame = {
-    val withBlk = batch
+    val n = lit(numPartitions)
+    val ranked = batch
       .withColumn("_blk", (col(orderCol) / ledgerSize).cast("long"))
-    val sequenced =
-      if (allKeyed) buildKeyedSequences(withBlk, numPartitions, orderCol)
-      else {
-        // keyless round-robin routes on the global position, so the
-        // sequencing has to happen in two rounds: global first, then
-        // per-routed-partition
-        val global = Sequencing.globalSequence(withBlk, "_blk", orderCol, "_g")
-        val routed = global.withColumn("_pt",
-          when(col("key").isNotNull, keyHashPartition(col("key"), numPartitions))
-            .otherwise(pmod(col("_g"), lit(numPartitions)).cast("int")))
-        Sequencing.keyedSequence(routed, Seq("_pt"), "_blk", orderCol, "_entry")
-      }
+      .withColumn("_r", row_number().over(
+        Window.partitionBy(col("_blk")).orderBy(col(orderCol))) - 1)
+      .withColumn("_cls", when(col("key").isNotNull, keyHashPartition(col("key"), numPartitions))
+        .otherwise(n + pmod(col("_r"), n)))
+    // rows of all earlier blocks (every class), then rows of earlier
+    // blocks routed to the same partition
+    val earlierBlocks = Window.orderBy(col("_blk"))
+      .rangeBetween(Window.unboundedPreceding, -1)
+    val earlierInPartition = Window.partitionBy(col("_pt")).orderBy(col("_blk"))
+      .rangeBetween(Window.unboundedPreceding, -1)
+    val offs = ranked.groupBy(col("_blk"), col("_cls"))
+      .agg(count(lit(1)).as("_n"))
+      .withColumn("_gpfx", coalesce(sum(col("_n")).over(earlierBlocks), lit(0L)))
+      .withColumn("_pt", when(col("_cls") < n, col("_cls"))
+        .otherwise(pmod(col("_gpfx") + col("_cls") - n, n)).cast("int"))
+      .withColumn("_ppfx", coalesce(sum(col("_n")).over(earlierInPartition), lit(0L)))
+    val sequenced = ranked.join(broadcast(offs), Seq("_blk", "_cls"))
+      .withColumn("_g", col("_gpfx") + col("_r"))
+      .withColumn("_entry", col("_ppfx") + row_number().over(
+        Window.partitionBy(col("_pt"), col("_blk")).orderBy(col(orderCol))) - 1)
     val eventMs = if (batch.columns.contains("event_ms")) col("event_ms") else lit(nowMs)
     val props = if (batch.columns.contains("properties")) col("properties") else lit("{}")
     // MessageId is per-partition (ledger, entry): ledgers roll every
@@ -89,38 +112,6 @@ object Produce {
       concat(lit(s"$topic-"), col("_g") + startOffset).as("uuid"),
       lit(1).as("num_chunks"),
       lit(false).as("compacted_out"))
-  }
-
-  /**
-   * All-keyed fast path: when every row is keyed (a keyed producer's
-   * batch, the reference's common case), the route is key-pure, so BOTH
-   * sequences — global `_g` and per-partition `_entry` — derive from ONE
-   * (block, partition) count summary: two windows over that summary give
-   * each (block, partition) its offsets, one broadcast join carries them
-   * to the rows, and two partitioned row windows number the rows — a
-   * single scan of the batch instead of the two-round chain the keyless
-   * router forces.
-   */
-  private def buildKeyedSequences(withBlk: DataFrame, numPartitions: Int,
-      orderCol: String): DataFrame = {
-    val routed = withBlk.withColumn("_pt", keyHashPartition(col("key"), numPartitions))
-    // rows of all earlier blocks (every partition), and rows of earlier
-    // blocks in the same partition
-    val earlierBlocks = Window.orderBy(col("_blk"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    val earlierInPartition = Window.partitionBy(col("_pt")).orderBy(col("_blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = routed.groupBy(col("_blk"), col("_pt"))
-      .agg(count(lit(1)).as("_n"))
-      .select(col("_blk"), col("_pt"),
-        coalesce(sum(col("_n")).over(earlierBlocks), lit(0L)).as("_gpfx"),
-        coalesce(sum(col("_n")).over(earlierInPartition), lit(0L)).as("_ppfx"))
-    val wG = Window.partitionBy(col("_blk")).orderBy(col(orderCol))
-    val wP = Window.partitionBy(col("_pt"), col("_blk")).orderBy(col(orderCol))
-    routed.join(broadcast(offs), Seq("_pt", "_blk"))
-      .withColumn("_g", col("_gpfx") + row_number().over(wG) - 1)
-      .withColumn("_entry", col("_ppfx") + row_number().over(wP) - 1)
-      .drop("_gpfx", "_ppfx")
   }
 
   /**

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /**
@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
  * The bound: one task per key holds rows/blockSize summary rows — about
  * 10^8 for a 100 TB topic at 1k-entry ledgers, tens of bytes each — and
  * never a message row.
+ *
+ * The four public helpers differ only in the block fold (count, sum or
+ * max), the fold direction and the row window; all of them run the one
+ * private body `twoLevel`. The produce path's keyless router needs a
+ * route that depends on the global position, so [[Produce.build]] keeps
+ * its own (block, route class) summary instead.
  */
 object Sequencing {
 
@@ -47,30 +53,39 @@ object Sequencing {
   }
 
   /**
-   * 0-based position of each row within its key group, ordered by
-   * (blockCol, orderCol). Requires orderCol unique within a block
-   * (MessageId order gives this for free). `keyCols` may be empty — the
-   * dense GLOBAL sequence — or constant-valued; neither creates an
-   * unpartitioned window.
+   * The one two-level body behind the helpers below: `blockAgg` folds
+   * each (key, block) to `_val` (over `_rowval` = `rowVal`, when given),
+   * [[exclusiveBlockPrefix]] turns the folds into `_blk_prefix`, the
+   * prefix joins back on (key, block), and `rowExpr` combines it with a
+   * row window inside (key, block) ordered by `orderCol` (descending
+   * when `desc`, which also folds newer blocks first).
    */
-  def keyedSequence(env: DataFrame, keyCols: Seq[String], blockCol: String,
-      orderCol: String, outCol: String): DataFrame = {
-    val blocks = env.groupBy((keyCols :+ blockCol).map(col): _*)
-      .agg(count(lit(1)).as("_val"))
-    val offsets = exclusiveBlockPrefix(blocks, keyCols, blockCol,
-      isMax = false, desc = false, "_blk_prefix")
-    val withinW = Window.partitionBy((keyCols :+ blockCol).map(col): _*)
-      .orderBy(col(orderCol))
-    env.join(offsets, keyCols :+ blockCol)
-      .withColumn(outCol, col("_blk_prefix") + row_number().over(withinW) - 1)
-      .drop("_blk_prefix")
+  private def twoLevel(env: DataFrame, keyCols: Seq[String], blockCol: String,
+      orderCol: String, outCol: String, rowVal: Option[Column], blockAgg: Column,
+      isMax: Boolean, desc: Boolean)(rowExpr: (WindowSpec, Column) => Column): DataFrame = {
+    val rows = rowVal.fold(env)(env.withColumn("_rowval", _))
+    val keys = keyCols :+ blockCol
+    val blocks = rows.groupBy(keys.map(col): _*).agg(blockAgg.as("_val"))
+    val offsets = exclusiveBlockPrefix(blocks, keyCols, blockCol, isMax, desc,
+      "_blk_prefix")
+    val withinW = Window.partitionBy(keys.map(col): _*)
+      .orderBy(if (desc) col(orderCol).desc else col(orderCol))
+    rows.join(offsets, keys)
+      .withColumn(outCol, rowExpr(withinW, col("_blk_prefix")))
+      .drop("_blk_prefix" +: rowVal.map(_ => "_rowval").toSeq: _*)
   }
 
-  /** Dense 0-based GLOBAL position in (blockCol, orderCol) order — the
-   * produce path's total order ([[keyedSequence]] with no keys). */
-  def globalSequence(env: DataFrame, blockCol: String, orderCol: String,
-      outCol: String): DataFrame =
-    keyedSequence(env, Seq.empty, blockCol, orderCol, outCol)
+  /**
+   * 0-based position of each row within its key group, ordered by
+   * (blockCol, orderCol). Requires orderCol unique within a block
+   * (MessageId order gives this for free). `keyCols` may be empty — a
+   * dense GLOBAL sequence — or constant-valued; neither creates an
+   * unpartitioned row window.
+   */
+  def keyedSequence(env: DataFrame, keyCols: Seq[String], blockCol: String,
+      orderCol: String, outCol: String): DataFrame =
+    twoLevel(env, keyCols, blockCol, orderCol, outCol, None, count(lit(1)),
+      isMax = false, desc = false) { (w, prefix) => prefix + row_number().over(w) - 1 }
 
   /**
    * Exclusive running max of `valueExpr` per key in (blockCol, orderCol)
@@ -79,22 +94,14 @@ object Sequencing {
    * prefix max of all earlier blocks.
    */
   def keyedRunningMaxExcl(env: DataFrame, keyCols: Seq[String], blockCol: String,
-      orderCol: String, valueExpr: Column, outCol: String): DataFrame = {
-    val valued = env.withColumn("_rowval", valueExpr)
-    val blocks = valued.groupBy((keyCols :+ blockCol).map(col): _*)
-      .agg(max(col("_rowval")).as("_val"))
-    val offsets = exclusiveBlockPrefix(blocks, keyCols, blockCol,
-      isMax = true, desc = false, "_blk_prefix_max")
-    val withinW = Window.partitionBy((keyCols :+ blockCol).map(col): _*)
-      .orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    valued.join(offsets, keyCols :+ blockCol)
-      .withColumn(outCol,
-        greatest(coalesce(max(col("_rowval")).over(withinW), lit(Long.MinValue)),
-          coalesce(col("_blk_prefix_max"), lit(Long.MinValue))))
-      .withColumn(outCol, when(col(outCol) === Long.MinValue, lit(null)).otherwise(col(outCol)))
-      .drop("_rowval", "_blk_prefix_max")
-  }
+      orderCol: String, valueExpr: Column, outCol: String): DataFrame =
+    twoLevel(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
+      max(col("_rowval")), isMax = true, desc = false) { (w, prefix) =>
+      greatest(
+        coalesce(max(col("_rowval")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
+          lit(Long.MinValue)),
+        coalesce(prefix, lit(Long.MinValue)))
+    }.withColumn(outCol, when(col(outCol) === Long.MinValue, lit(null)).otherwise(col(outCol)))
 
   /**
    * Oldest-first EXCLUSIVE running sum of `valueExpr` per key in
@@ -103,20 +110,12 @@ object Sequencing {
    * which fixed-size bucket does this row's first byte fall in.
    */
   def keyedCumSumExcl(env: DataFrame, keyCols: Seq[String], blockCol: String,
-      orderCol: String, valueExpr: Column, outCol: String): DataFrame = {
-    val sized = env.withColumn("_rowval", valueExpr)
-    val blocks = sized.groupBy((keyCols :+ blockCol).map(col): _*)
-      .agg(sum(col("_rowval")).as("_val"))
-    val offsets = exclusiveBlockPrefix(blocks, keyCols, blockCol,
-      isMax = false, desc = false, "_blk_prefix")
-    val withinW = Window.partitionBy((keyCols :+ blockCol).map(col): _*)
-      .orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    sized.join(offsets, keyCols :+ blockCol)
-      .withColumn(outCol,
-        col("_blk_prefix") + coalesce(sum(col("_rowval")).over(withinW), lit(0L)))
-      .drop("_rowval", "_blk_prefix")
-  }
+      orderCol: String, valueExpr: Column, outCol: String): DataFrame =
+    twoLevel(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
+      sum(col("_rowval")), isMax = false, desc = false) { (w, prefix) =>
+      prefix + coalesce(sum(col("_rowval"))
+        .over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+    }
 
   /**
    * Newest-first running sum of `valueExpr` per key (retention-style
@@ -124,17 +123,9 @@ object Sequencing {
    * newer blocks.
    */
   def keyedCumSumDesc(env: DataFrame, keyCols: Seq[String], blockCol: String,
-      orderCol: String, valueExpr: Column, outCol: String): DataFrame = {
-    val sized = env.withColumn("_rowval", valueExpr)
-    val blocks = sized.groupBy((keyCols :+ blockCol).map(col): _*)
-      .agg(sum(col("_rowval")).as("_val"))
-    val offsets = exclusiveBlockPrefix(blocks, keyCols, blockCol,
-      isMax = false, desc = true, "_blk_prefix")
-    val withinW = Window.partitionBy((keyCols :+ blockCol).map(col): _*)
-      .orderBy(col(orderCol).desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    sized.join(offsets, keyCols :+ blockCol)
-      .withColumn(outCol, col("_blk_prefix") + sum(col("_rowval")).over(withinW))
-      .drop("_rowval", "_blk_prefix")
-  }
+      orderCol: String, valueExpr: Column, outCol: String): DataFrame =
+    twoLevel(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
+      sum(col("_rowval")), isMax = false, desc = true) { (w, prefix) =>
+      prefix + sum(col("_rowval")).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    }
 }

@@ -702,8 +702,8 @@ object CorpusQueries extends QueryGroup {
 
   /** The real BPE tokenizer's per-doc output, run-scoped (p34 checks it;
    * p70 rolls it up per source). Same pattern as [[lmScored]]: the
-   * tokenize pass is the expensive stage of both queries, a harness
-   * charges it to the named warmup, and a production pipeline would
+   * tokenize pass is the expensive stage of both queries, the first of
+   * them in a run builds it, and a production pipeline would
    * checkpoint the token relation between "tokenize" and downstream
    * stages. */
   private def bpeTokens(s: SparkSession, d: String): DataFrame =
@@ -719,11 +719,6 @@ object CorpusQueries extends QueryGroup {
         .tokenize(docs(s, d), "doc_id", "text", numMerges = 50,
           minCount = 2L).toDF()
     }
-
-  /** Populate the BPE token relation (see graft.Bench's named warmup). */
-  def warmSharedBpe(s: SparkSession, d: String): Unit = {
-    bpeTokens(s, d).count(): Unit
-  }
 
   private val p34 = QueryDef(
     // Real byte-pair encoding: merges learned from THIS corpus's word
@@ -904,9 +899,9 @@ object CorpusQueries extends QueryGroup {
   /** p49/p57 shared bigram-LM scoring, memoized RUN-scoped: the LM
    * training + per-doc scoring is the expensive stage of both queries
    * (the bucketing half is histogram-scale). Same pattern as the LSH
-   * verified-pair relation — a harness charges it to the named warmup
-   * (see graft.Bench), and a production pipeline would checkpoint the
-   * scored relation between its "score" and "route" stages. */
+   * verified-pair relation — the first of them in a run builds it, and
+   * a production pipeline would checkpoint the scored relation between
+   * its "score" and "route" stages. */
   private def lmScored(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:lm-scored:$d") {
@@ -915,12 +910,6 @@ object CorpusQueries extends QueryGroup {
         .join(docs(s, d).select(col("doc_id"), col("lang"))
           .hint("merge"), Seq("doc_id"))
     }
-
-  /** Populate the run-scoped shared derivations of this group (see
-   * graft.Bench's named warmup step). */
-  def warmShared(s: SparkSession, d: String): Unit = {
-    lmScored(s, d).count(): Unit
-  }
 
   /** The p49 bigram-LM scoring pipeline as a reusable oracle CTE ending
    * in `scored(doc_id, lang, n_bigrams, oov_bigrams, ppl)` — shared by
@@ -1566,18 +1555,13 @@ object CorpusQueries extends QueryGroup {
   /** The BM25 top-10 ranking shared by p79 (the ranking) and p82 (the
    * hybrid fusion), memoized RUN-scoped — the tf/df/dl derivation is the
    * expensive stage of both; a production search stack materializes its
-   * index once per corpus snapshot. Charged to the named bench warmup. */
+   * index once per corpus snapshot. */
   private def bm25Shared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:bm25-top10:$d") {
       Retrieval.bm25TopK(docs(s, d),
         docs(s, d).filter(col("doc_id") < 5), "doc_id", "text", k = 10)
     }
-
-  /** Populate the retrieval memo (see graft.Bench). */
-  def warmSharedBm25(s: SparkSession, d: String): Unit = {
-    bm25Shared(s, d).count(): Unit
-  }
 
   // --------------------------------------------- p82 hybrid rank fusion
 
@@ -1676,17 +1660,12 @@ object CorpusQueries extends QueryGroup {
 
   /** The NB score relation p85 and p114 share, memoized RUN-scoped (the
    * lmScored pattern): one scoring pass — the expensive stage of both —
-   * charged to the named bench warmup. */
+   * per run. */
   private def nbScoredShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:nb-scored:$d") {
       CorpusOps.nbScores(docs(s, d), "doc_id", "text", "lang")
     }
-
-  /** Populate the NB scoring memo (see graft.Bench). */
-  def warmSharedNb(s: SparkSession, d: String): Unit = {
-    nbScoredShared(s, d).count(): Unit
-  }
 
   /** Shared NB oracle CTEs (through `score`): materializes the same
    * ×10⁴-integer log-likelihood relation the engine's nbScored builds by

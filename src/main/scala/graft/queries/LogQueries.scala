@@ -364,7 +364,7 @@ object LogQueries extends QueryGroup {
   private val s1 = QueryDef(
     (s, d) => {
       val msgs = Produce.build(produceInput(s, d), "produced", "w0",
-        numPartitions = 6, orderCol = "event_id", nowMs = 0L, allKeyed = true)
+        numPartitions = 6, orderCol = "event_id", nowMs = 0L)
         .persist() // two appends + their dedup scans share one build
       val dir = freshDir("produce", d)
       Produce.appendDedup(s, msgs, dir)
@@ -392,7 +392,7 @@ object LogQueries extends QueryGroup {
   private val s2 = QueryDef(
     (s, d) => Produce.build(produceInput(s, d), "produced", "w0",
       numPartitions = 6, orderCol = "event_id", nowMs = 1700000000000L,
-      deliverAfterMs = 60000L, allKeyed = true)
+      deliverAfterMs = 60000L)
       .select(col("partition_id"), col("msg_offset"), col("sequence_id"),
         col("ledger_id"), col("entry_id"), col("key"), col("publish_ms"),
         col("deliver_at_ms"))
@@ -413,9 +413,9 @@ object LogQueries extends QueryGroup {
 
   private val s2b = QueryDef(
     // Keyless produce: the round-robin router assigns partitions from the
-    // GLOBAL position (RoundRobinPartitionMessageRouterImpl), which forces
-    // the two-round sequencing path (global sequence first, then
-    // per-partition entries) — the branch allKeyed batches skip.
+    // GLOBAL position (RoundRobinPartitionMessageRouterImpl). The one
+    // produce route fixes that position per (block, route class) in its
+    // summary, so keyless rows take the same single pass keyed rows do.
     (s, d) => {
       val keyless = EventLog.raw(s, d)
         .filter(col("event_id") < 3000 && col("user_id") < 15)
@@ -1422,11 +1422,10 @@ object LogQueries extends QueryGroup {
       // append: the log's order lives in the (offset, sequence) columns,
       // not in write-call order, so a single write job replaces four.
       val toStage = Transactions.produceInTxn(
-        Produce.build(slice(0, 1000), "txn-topic", "w0", 4, "event_id", 0L,
-          allKeyed = true), 100L)
+        Produce.build(slice(0, 1000), "txn-topic", "w0", 4, "event_id", 0L), 100L)
         .unionByName(Transactions.produceInTxn(
           Produce.build(slice(1000, 2000), "txn-topic", "w0", 4, "event_id", 0L,
-            startOffset = 10000L, allKeyed = true), 101L))
+            startOffset = 10000L), 101L))
       val markers = Transactions.txnMarker(s, "txn-topic", 100L, commit = true, 99998L)
         .unionByName(Transactions.txnMarker(s, "txn-topic", 101L, commit = false, 99999L))
       Produce.append(toStage.unionByName(markers.select(toStage.columns.map(col): _*)), dir)

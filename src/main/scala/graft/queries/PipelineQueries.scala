@@ -254,7 +254,7 @@ object PipelineQueries extends QueryGroup {
    * (PageRank), memoized RUN-scoped: the kNN-graph derivation behind it
    * is the expensive stage of both (the edge list itself is tiny), and a
    * production pipeline would checkpoint the graph between its "build"
-   * and each "analyze" stage. Charged to the named bench warmup. */
+   * and each "analyze" stage. */
   private def mutualEdgesShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:mutual-edges:$d") {
@@ -264,16 +264,6 @@ object PipelineQueries extends QueryGroup {
           col("embedding").as("cembedding"))
       Similarity.mutualKnnEdges(e, centroids, k = 3, minSim = 0.2)
     }
-
-  /** Populate the graph-derivation memo (see graft.Bench). */
-  def warmSharedGraph(s: SparkSession, d: String): Unit = {
-    mutualEdgesShared(s, d).count(): Unit
-  }
-
-  /** Populate the covariance memo p90/p91 share (see graft.Bench). */
-  def warmSharedCov(s: SparkSession, d: String): Unit = {
-    covShared(s, d).count(): Unit
-  }
 
   private val p15 = QueryDef(
     // The UNBOUNDED production path: MinHash-LSH banding + exact confirm
@@ -3096,11 +3086,6 @@ object PipelineQueries extends QueryGroup {
       DedupOps.hammingPairs(hashed, "doc_id", "dhash",
         bits = 56, maxDist = 7, blocks = 8)
     }
-
-  /** Populate the dHash pair memo (see graft.Bench). */
-  def warmSharedDhash(s: SparkSession, d: String): Unit = {
-    dhashPairsShared(s, d).count(): Unit
-  }
 
   private val p58 = QueryDef(
     // Image near-duplicate detection end to end: dHash (gradient hash)

@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
-/** One TableView entry (latest value per key). */
-case class TableViewEntry(value: Double, publish_ms: Long, msg_offset: Long)
+/** One TableView entry (latest value per key; `None` where that message's
+ * value is null, as the batch `Compaction.tableView` shows it). */
+case class TableViewEntry(value: Option[Double], publish_ms: Long, msg_offset: Long)
 
 /** One emitted count window (W5). */
 case class CountWindow(key: String, window_id: Long, n: Long, sum_v: Double)
@@ -133,9 +134,10 @@ object StreamingOps {
    * cardinality of the topic, NOT the corpus size. `maxKeys` documents
    * that bound and the stream FAILS BY NAME when a topic exceeds it,
    * instead of silently OOMing the driver at 100 TB key spaces. Census:
-   * an entry is one key string plus a 24-byte payload plus hash-map
-   * overhead ≈ 150 B, so the default 1,048,576 keys ≈ 160 MB of driver
-   * heap — a compacted-topic/config-table cardinality. Past that the
+   * an entry is one key string plus a 24-byte payload (and 32 B more
+   * for the boxed `Option` value) plus hash-map overhead ≈ 180 B, so the
+   * default 1,048,576 keys ≈ 190 MB of driver heap — a
+   * compacted-topic/config-table cardinality. Past that the
    * right operator is [[compactedTableStream]], whose view is a bucketed
    * parquet TABLE (bounded by storage, per-batch work O(delta)): same
    * latest-per-key delta upstream, no driver-resident state.
@@ -156,7 +158,8 @@ object StreamingOps {
         def apply(r: org.apache.spark.sql.Row): Unit = {
           val k = r.getAs[String]("key")
           if (r.getAs[Boolean]("tombstone")) view.remove(k)
-          else view.upsert(k, TableViewEntry(r.getAs[Double]("value"),
+          else view.upsert(k, TableViewEntry(
+            Option(r.getAs[java.lang.Double]("value")).map(_.doubleValue),
             r.getAs[Long]("publish_ms"), r.getAs[Long]("msg_offset")))
         }
         def refuse(): Nothing = throw new IllegalStateException(

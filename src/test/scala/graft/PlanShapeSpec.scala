@@ -298,7 +298,9 @@ class PlanShapeSpec extends AnyFunSuite {
       //  - q6b: the hundred-dollar coarse price histogram — ndv ≤ the
       //    o_totalprice domain / 100 (the two-level order-statistic
       //    design's documented first level).
-      //  - s2: fully prefix-bounded envelope slice (event_id < 3000).
+      //  - s2/s2b: fully prefix-bounded envelope slice (event_id < 3000);
+      //    the broadcast is the produce route's (block, route class)
+      //    summary, keyed (s2) or keyless (s2b) alike.
       "p106_ks_test" -> Set("documents:group-raw"),
       "p112_association_rules" -> Set("documents:group-raw"),
       "p119_sq8_quantize" -> Set("embeddings:group-raw"),
@@ -313,7 +315,8 @@ class PlanShapeSpec extends AnyFunSuite {
       "p128_hnsw_append_audit" -> (modE + "embeddings:group-mod50"),
       "q30_retention_cohorts" -> Set("events:group-raw"),
       "q6b_quartile_cutoffs" -> Set("orders:group-raw"),
-      "s2_message_builder" -> Set("events:group-prefix"))
+      "s2_message_builder" -> Set("events:group-prefix"),
+      "s2b_keyless_rr" -> Set("events:group-prefix"))
     val offenders = SurfaceWalk.facts.toSeq.sortBy(_._1).flatMap {
       case (name, f) =>
         f.failure.map(e => s"$name: plan build failed: $e").toSeq ++ {
@@ -369,11 +372,10 @@ class PlanShapeSpec extends AnyFunSuite {
     //  - s17 ×1: the replicated-subscription UPDATE ranking — a
     //    control-plane marker slice, schedule-scale by the reference's
     //    snapshot contract, never the data path;
-    //  - s2 ×1 / s2b ×2: envelope teaching slices fully bounded by
-    //    event_id < 3000 (the walk proves it: class group-prefix); s2b's
-    //    two are the one global-sequence block-prefix window, reached
-    //    twice: the per-partition sequence reads the globally sequenced
-    //    rows once for its block summary and once for its row join.
+    //  - s2 ×1 / s2b ×1: envelope teaching slices fully bounded by
+    //    event_id < 3000 (the walk proves it: class group-prefix); each
+    //    is the produce route's global block-prefix window over its
+    //    (block, route class) summary.
     val allowlist: Map[String, Map[String, Int]] = Map(
       "q6_window_suite" -> Map("orders:raw" -> 1),
       "p105_rank_sum" -> Map("documents:raw" -> 2),
@@ -383,7 +385,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "q6b_quartile_cutoffs" -> Map("orders:group-raw" -> 2),
       "s17_replicated_subscription" -> Map("events:group-raw" -> 1),
       "s2_message_builder" -> Map("events:group-prefix" -> 1),
-      "s2b_keyless_rr" -> Map("events:group-prefix" -> 2))
+      "s2b_keyless_rr" -> Map("events:group-prefix" -> 1))
     val offenders = SurfaceWalk.facts.toSeq.sortBy(_._1).flatMap {
       case (name, f) =>
         f.failure.map(e => s"$name: plan build failed: $e").toSeq ++ {

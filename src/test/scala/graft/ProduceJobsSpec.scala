@@ -25,4 +25,18 @@ class ProduceJobsSpec extends AnyFunSuite {
       assert(jobs <= 16)
     } finally Scratch.rm(dir)
   }
+
+  test("appendDedup of a 1000-row keyless batch onto a non-empty topic runs at most 13 jobs") {
+    // the round-robin route sequences in the same single pass as the
+    // keyed one; the two-round keyless chain it replaced ran 15
+    val dir = Scratch.freshDir("produce-jobs-keyless")
+    try {
+      operators.Produce.append(keylessBatch(1000, 4), dir)
+      val batch = keylessBatch(1000, 4, start = 1000L)
+      val (accepted, jobs) = countingJobs(operators.Produce.appendDedup(spark, batch, dir))
+      assert(accepted === 1000L)
+      info(s"appendDedup ran $jobs jobs")
+      assert(jobs <= 13)
+    } finally Scratch.rm(dir)
+  }
 }

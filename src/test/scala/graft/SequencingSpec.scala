@@ -80,11 +80,4 @@ class SequencingSpec extends AnyFunSuite {
       assert(rows(fast, "cum").toSeq === rows(naive, "cum").toSeq)
     }
   }
-
-  test("globalSequence is dense over all rows") {
-    val df = data(4, constantKey = false)
-    val out = Sequencing.globalSequence(df, "blk", "ord", "g")
-      .select("g").collect().map(_.getLong(0)).sorted
-    assert(out.toSeq === (0L until 240L))
-  }
 }

@@ -84,7 +84,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     envelopes.grouped(2).foreach { c => s.addData(c.toSeq); q.processAllAvailable() }
     q.stop()
     val batch = Compaction.tableView(log).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      .map(r => r.getString(0) -> Some(r.getDouble(1))).toMap
     assert(view.snapshot.view.mapValues(_.value).toMap === batch)
     assert(view.get("b").isEmpty) // tombstoned
   }
@@ -159,7 +159,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val view = new graft.streaming.TableView
     var events = List.empty[(String, Boolean)]
     view.forEachAndListen((k, v) => events ::= (k, v.isDefined))
-    view.upsert("x", graft.streaming.TableViewEntry(1.0, 0L, 0L))
+    view.upsert("x", graft.streaming.TableViewEntry(Some(1.0), 0L, 0L))
     view.remove("x")
     assert(events.reverse === List(("x", true), ("x", false)))
   }
@@ -177,8 +177,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     batchDf.as[MessageEnvelope].collect().sortBy(_.msg_offset)
   private lazy val chunks = envs.grouped(math.max(1, envs.length / 5 + 1)).toSeq
 
-  private lazy val batchView = Compaction.tableView(batchDf).collect()
-    .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2), r.getLong(3))).toMap
+  private lazy val batchView = viewOf(Compaction.tableView(batchDf))
   private lazy val batchKept = Dedup.dropReplays(batchDf).select("msg_offset")
     .collect().map(_.getLong(0)).sorted.toSeq
   private lazy val batchWin = TimeWindows.tumbling(batchDf, H6_MS,
@@ -501,7 +500,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filter(col("user_id") < 15)
         .select(col("event_id"), col("user_id").cast("string").as("key"),
           col("value")),
-      "once-out", "w0", 4, "event_id", nowMs = 0L, allKeyed = true)
+      "once-out", "w0", 4, "event_id", nowMs = 0L)
     val firstAppend = graft.operators.Produce.appendDedup(spark, msgs, outDir)
     val dupAppend = graft.operators.Produce.appendDedup(spark, msgs, outDir)
     val finalCount = spark.read.parquet(outDir).count()
@@ -551,9 +550,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tableDir = tmpDir("graft-ctable-") + "/t"
     replay(envs.toSeq)(s =>
       StreamingOps.compactedTableStream(s.toDF(), ckpt(), tableDir))
-    val tableRows = StreamingOps.compactedTable(spark, tableDir)
-      .select("key", "value", "publish_ms", "msg_offset").collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2), r.getLong(3))).toMap
+    val tableRows = viewOf(StreamingOps.compactedTable(spark, tableDir)
+      .select("key", "value", "publish_ms", "msg_offset"))
     assert(tableRows == batchView,
       s"table=${tableRows.size} keys batch=${batchView.size} keys")
   }
@@ -582,7 +580,24 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = viewOf(Compaction.tableView(topicRows(topic)))
     assert(view.size === 7)
     assert(view.snapshot.map { case (k, e) =>
-      k -> (Some(e.value), e.publish_ms, e.msg_offset) } === batch)
+      k -> (e.value, e.publish_ms, e.msg_offset) } === batch)
+  }
+
+  test("tableViewStream keeps a null latest value null") {
+    // a key whose latest message has a null value and no tombstone stays
+    // in the view with no value, as in the batch twin: not as 0.0
+    import spark.implicits._
+    val topic = tmpDir("graft-tv-null-") + "/topic"
+    val raw = Seq((0L, "a", Some(1.5)), (1L, "a", Option.empty[Double]))
+      .toDF("ord", "key", "value")
+    operators.Produce.append(operators.Produce.build(raw, "t", "p", 1, "ord", 0L), topic)
+    val (q, view) = StreamingOps.tableViewStream(
+      TopicStream.subscribe(spark, topic, maxFilesPerTrigger = 1000), ckpt())
+    try q.processAllAvailable() finally q.stop()
+    val batch = viewOf(Compaction.tableView(topicRows(topic)))
+    assert(batch("a")._1 === None)
+    assert(view.snapshot.map { case (k, e) =>
+      k -> (e.value, e.publish_ms, e.msg_offset) } === batch)
   }
 
   test("compactedTableStream keeps every key of a file:// table across batches") {

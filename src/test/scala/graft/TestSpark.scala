@@ -31,12 +31,20 @@ object TestSpark {
 
   /** A keyed producer batch of `rows` messages (keys k0..k6) built for
    * `partitions` partitions, offsets and sequence ids from `start`. */
-  def keyedBatch(rows: Int, partitions: Int, start: Long = 0L): DataFrame = {
+  def keyedBatch(rows: Int, partitions: Int, start: Long = 0L): DataFrame =
+    producerBatch(rows, partitions, start, i => Some(s"k${i % 7}"))
+
+  /** [[keyedBatch]] with every key null: the round-robin route. */
+  def keylessBatch(rows: Int, partitions: Int, start: Long = 0L): DataFrame =
+    producerBatch(rows, partitions, start, _ => None)
+
+  private def producerBatch(rows: Int, partitions: Int, start: Long,
+      key: Int => Option[String]): DataFrame = {
     import spark.implicits._
-    val raw = (0 until rows).map(i => (i.toLong, s"k${i % 7}", i.toDouble))
+    val raw = (0 until rows).map(i => (i.toLong, key(i), i.toDouble))
       .toDF("ord", "key", "value")
     graft.operators.Produce.build(raw, "t", "p", partitions, "ord", 0L,
-      startOffset = start, startSeq = start, allKeyed = true)
+      startOffset = start, startSeq = start)
   }
 
   /** Envelope rows from compact tuples: (offset, producer, seq, key, value,

@@ -1,36 +1,56 @@
 package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.SparkSession
+import Measure.fmt
 
 object Bench {
-  private def fmt(v: Double): String = BigDecimal(v)
-    .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
 
-  /** Runs one bench entry and prints its BENCHQ line: the seconds on
-   * success, `FAILED:<exception class>` on a throw. A failure returns
-   * Left and is never timed — a query that dies early must not read as
-   * a fast success. Per-query fan-out caches are released either way. */
-  private[graft] def timeQuery(name: String)(body: => Unit): Either[String, Double] = {
-    val t0 = System.nanoTime()
-    val failed = try { body; None }
-      catch { case t: Throwable => Some(t.getClass.getName) }
-      finally CacheScope.releaseAll()
-    val r = failed.toLeft((System.nanoTime() - t0) / 1e9)
-    println(s"BENCHQ $name ${r.fold("FAILED:" + _, fmt)}")
+  /** Measures one bench entry and prints its BENCHQ line: the seconds
+   * (build plus action) on success, `FAILED:<exception class>` on a
+   * throw. A failed entry carries no seconds — a query that dies early
+   * must not read as a fast success. */
+  private[graft] def entry[B](spark: SparkSession, name: String)(build: => B)(
+      action: B => Any): Measure.Record = {
+    val (_, r) = Measure(spark)(build)(action)
+    println(s"BENCHQ $name ${if (r.ok) fmt(r.seconds) else r.status}")
     r
   }
 
+  /** The timed `_warmup_shared` entry: runs every stage, printing
+   * `BENCHW <stage> <sec>` for each, with ` FAILED:<class>` after a
+   * throw, so a warmup regression is attributable to ONE derivation
+   * without re-profiling. A failed stage fails the entry with the first
+   * failure's class: a swallowed failure would shift its derivation cost
+   * onto the first consumer's BENCHQ, the misattribution these lines
+   * exist to prevent. */
+  private[graft] def warmup(spark: SparkSession,
+      stages: Seq[(String, () => Unit)]): Measure.Record =
+    entry(spark, "_warmup_shared")(()) { _ =>
+      val failures = stages.flatMap { case (name, body) =>
+        val t = System.nanoTime()
+        val failed = try { body(); None } catch { case e: Throwable => Some(e) }
+        println(s"BENCHW $name ${fmt((System.nanoTime() - t) / 1e9)}" +
+          failed.fold("")(e => " FAILED:" + e.getClass.getName))
+        failed
+      }
+      failures.headOption.foreach(throw _)
+    }
+
   /** The totals JSON: `value` sums only the entries that succeeded;
    * `n` counts every entry, `n_failed`/`failed` name the ones that
-   * threw. With `perQuery`, also the full per-entry seconds map. */
-  private[graft] def summary(results: Seq[(String, Either[String, Double])],
+   * threw. With `perQuery`, also every entry's [[Measure.Record]] and the
+   * per-entry seconds map. */
+  private[graft] def summary(results: Seq[(String, Measure.Record)],
       sfDir: String, perQuery: Boolean): String = {
-    val ok = results.collect { case (k, Right(v)) => k -> v }
-    val failed = results.collect { case (k, Left(_)) => "\"" + k + "\"" }
-    val qs = if (!perQuery) "" else ok.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val ok = results.filter(_._2.ok)
+    val failed = results.filterNot(_._2.ok).map { case (k, _) => "\"" + k + "\"" }
+    val records = if (!perQuery) "" else results
+      .map { case (k, r) => "\"" + k + "\":" + r.json }.mkString(",\"records\":{", ",", "}")
+    val qs = if (!perQuery) "" else ok.map { case (k, r) => "\"" + k + "\":" + fmt(r.seconds) }
       .mkString(",\"queries\":{", ",", "}")
-    s"""{"metric":"total","value":${fmt(ok.map(_._2).sum)},"unit":"sec",""" +
-      s""""n":${results.size},"n_failed":${failed.size},""" +
+    s"""{"metric":"total","value":${fmt(ok.map(_._2.seconds).sum)},"unit":"sec",""" +
+      s""""n":${results.size},"n_failed":${failed.size}$records,""" +
       s""""failed":${failed.mkString("[", ",", "]")}$qs,"sf":"$sfDir"}"""
   }
 
@@ -100,29 +120,15 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None        => SparkEntry.queries
     }
-    val w0 = System.nanoTime()
-    // per-stage diagnostic lines (BENCHW <stage> <sec>) so a warmup
-    // regression is attributable to ONE derivation without re-profiling
-    def stage(name: String)(body: => Unit): Unit = {
-      val t = System.nanoTime()
-      // a swallowed failure must not print a normal-looking line: a
-      // ~0 s "success" would silently shift the derivation cost onto
-      // the first consumer's BENCHQ — the exact misattribution these
-      // lines exist to prevent
-      val ok = try { body; true } catch { case _: Throwable => false }
-      val sec = fmt((System.nanoTime() - t) / 1e9)
-      println(s"BENCHW $name $sec${if (ok) "" else " FAILED"}")
-    }
-    stage("envelope") {
-      graft.model.EventLog.topic(spark, sfDir)
-        .groupBy("topic").count().collect()
-    }
     // the LSH pair derivation only warms when a consumer is selected,
     // so SPARK_GRAFT_ONLY profiling runs of other queries don't pay it
-    if (only.forall(n => n("p15_minhash_full") || n("p18_dup_clusters") ||
-        n("p51_leakage_free_split") || n("p117_keep_longest")))
-      stage("lsh_pairs") {
-        graft.queries.PipelineQueries.warmShared(spark, sfDir) }
+    val lsh = only.forall(n => n("p15_minhash_full") || n("p18_dup_clusters") ||
+        n("p51_leakage_free_split") || n("p117_keep_longest"))
+    val stages = Seq[(String, () => Unit)](
+      "envelope" -> (() => graft.model.EventLog.topic(spark, sfDir)
+        .groupBy("topic").count().collect()),
+      "lsh_pairs" -> (() => graft.queries.PipelineQueries.warmShared(spark, sfDir)))
+    val warm = warmup(spark, if (lsh) stages else stages.take(1))
     // Warmup policy (r12 trim, 27.3 s → <10 s at sf0.1): only the
     // envelope (≈80 consumers) and the LSH pair relation (the single
     // most expensive shared derivation, 4 consumers) pre-materialize
@@ -135,8 +141,6 @@ object Bench {
     // p90 +1.6 s, p58 +1.5 s, p34 +1.1 s; first = sorted name order).
     // Read those lines against PLAN_AUDIT's attribution note, not as
     // per-query regressions.
-    val warmupSec = (System.nanoTime() - w0) / 1e9
-    println(s"BENCHQ _warmup_shared ${fmt(warmupSec)}")
     // one human/judge-readable line per query as it completes, so the
     // stdout tail is useful even if the final summary line is clipped.
     // Sorted name order: Map iteration order shifts whenever a query is
@@ -152,14 +156,14 @@ object Bench {
       // their compute survived the count. The noop sink evaluates every
       // output column and discards the rows (the standard Spark
       // benchmarking sink).
-      name -> timeQuery(name) {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      }
+      name -> (try entry(spark, name)(fn(spark, sfDir))(
+          _.write.mode("overwrite").format("noop").save())
+        finally CacheScope.releaseAll())
     }
-    val results = ("_warmup_shared" -> Right(warmupSec)) +: perQuery
-    // The FULL summary (with the complete per-query map) always lands in
-    // a file: at 286 entries the map alone is ~7.9 kB, far past any
-    // bounded stdout tail capture.
+    val results = ("_warmup_shared" -> warm) +: perQuery
+    // The FULL summary (every entry's Measure record and the complete
+    // per-query map) always lands in a file: at 286 entries the seconds
+    // map alone is ~7.9 kB, far past any bounded stdout tail capture.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
     try {
       val p = Paths.get(outPath)

@@ -71,14 +71,6 @@ object GraftFunctions {
     GraftSqlBridge.column(MinKPairs(GraftSqlBridge.expression(distDst), k,
       dedup = true).toAggregateExpression())
 
-  /** F15 — zlib-compress a BINARY payload (CompressionCodecZLib). */
-  def zlibDeflate(payload: Column, level: Int = 6): Column =
-    GraftSqlBridge.column(ZlibDeflate(GraftSqlBridge.expression(payload), level))
-
-  /** F15 — zlib-decompress a BINARY payload. */
-  def zlibInflate(payload: Column): Column =
-    GraftSqlBridge.column(ZlibInflate(GraftSqlBridge.expression(payload)))
-
   /** F15 — compress with the codec named by a per-row column
    * (NONE/LZ4/ZLIB/ZSTD/SNAPPY — CompressionCodecProvider's switch). */
   def payloadCompress(payload: Column, codec: Column, level: Int = 6): Column =

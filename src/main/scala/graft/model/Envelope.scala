@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -79,10 +79,6 @@ object Envelope {
     StructField("num_chunks", IntegerType, nullable = false),
     StructField("compacted_out", BooleanType, nullable = false)
   ))
-
-  /** Total log order within a partition (MessageId order). */
-  def messageIdOrder: Seq[Column] =
-    Seq(col("ledger_id"), col("entry_id"), col("batch_index"))
 }
 
 /**

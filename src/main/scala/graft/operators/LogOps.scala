@@ -14,11 +14,6 @@ import org.apache.spark.sql.functions._
  */
 object LogOps {
 
-  /** F1 — TTL expiry: only messages newer than the TTL horizon survive
-   * (reference: PersistentMessageExpiryMonitor.java:102). */
-  def applyTtl(env: DataFrame, asOfMs: Long, ttlMs: Long): DataFrame =
-    env.filter(col("publish_ms") >= asOfMs - ttlMs)
-
   /** F2 — size-based retention per topic: newest-first cumulative size cap
    * (reference: RetentionPolicies; ledger-granular in the reference, row-
    * granular here). Ledger-first evaluation: per-ledger size totals
@@ -56,22 +51,6 @@ object LogOps {
       .filter(col("_cls") === 0 || col("_cum") <= maxBytesPerTopic)
       .select(env.columns.map(col): _*)
   }
-
-  /** F3/F4 — delayed delivery: a message is invisible until its
-   * deliver-at time (reference: InMemoryDelayedDeliveryTracker.java:221;
-   * bucketed variant scales the same predicate). */
-  def dueMessages(env: DataFrame, asOfMs: Long): DataFrame =
-    env.filter(col("deliver_at_ms") <= asOfMs)
-
-  /** O2 — seek to timestamp: resume the log at the first message published
-   * at or after `tsMs` (reference: Consumer.seek(timestamp), broker
-   * PersistentMessageFinder). */
-  def seekByTime(env: DataFrame, tsMs: Long): DataFrame =
-    env.filter(col("publish_ms") >= tsMs)
-
-  /** O3 — find-by-timestamp: the seek position itself (min offset ≥ ts). */
-  def findByTime(env: DataFrame, tsMs: Long): DataFrame =
-    seekByTime(env, tsMs).agg(min(col("msg_offset")).as("seek_offset"))
 
   /** O4 — peekMessages(n): first n messages of a topic in MessageId order. */
   def peek(env: DataFrame, topic: String, n: Int): DataFrame =
@@ -122,15 +101,6 @@ object LogOps {
   def unackedBacklog(env: DataFrame, ackedOffsets: DataFrame): DataFrame =
     env.join(ackedOffsets.withColumnRenamed(ackedOffsets.columns.head, "_acked"),
       col("msg_offset") === col("_acked"), "left_anti")
-
-  /** F9 — dead-letter routing: messages that exhausted maxRedeliverCount go
-   * to the DLQ view (reference: DeadLetterPolicy.java:46-64). */
-  def deadLetter(env: DataFrame, maxRedeliver: Int): DataFrame =
-    env.filter(col("attempts") >= maxRedeliver)
-
-  /** F9 — the retry-eligible complement. */
-  def retryable(env: DataFrame, maxRedeliver: Int): DataFrame =
-    env.filter(col("attempts") < maxRedeliver)
 
   /**
    * U10 — the full reconsumeLater lifecycle (reference:

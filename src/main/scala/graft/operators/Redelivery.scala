@@ -40,9 +40,4 @@ object Redelivery {
    * the bucket column is the partition key of the delayed index). */
   def delayedBuckets(env: DataFrame, bucketMs: Long): DataFrame =
     env.withColumn("delay_bucket", (col("deliver_at_ms") / bucketMs).cast("long"))
-
-  /** F4 — buckets entirely due at `asOf` (dispatchable without row checks). */
-  def dueBuckets(env: DataFrame, bucketMs: Long, asOfCol: Column): DataFrame =
-    delayedBuckets(env, bucketMs)
-      .filter((col("delay_bucket") + 1) * bucketMs - 1 <= asOfCol)
 }

@@ -176,14 +176,6 @@ object Routing {
   def entryBucketed(env: DataFrame, buckets: Int): DataFrame =
     stickyBucket(env).repartitionByRange(buckets, col("sticky_bucket"))
 
-  /** R10 — Exclusive/Failover: one active consumer per partition; on the
-   * active consumer's failure (a cutover point in the log) the next
-   * standby takes over — order preserved within the partition
-   * (PersistentDispatcherSingleActiveConsumer). */
-  def failover(env: DataFrame, failoverAtOffset: Long): DataFrame =
-    env.withColumn("consumer",
-      when(col("msg_offset") < failoverAtOffset, "consumer-0").otherwise("consumer-1"))
-
   /** R10 — Shared-subscription fair spread: work-queue assignment of
    * messages to n consumers, order not preserved across consumers. The
    * per-partition sequence is two-level ([[Sequencing.keyedSequence]]) so

@@ -45,14 +45,4 @@ object Sessionize {
         min(col("ms")).as("start_ms"),
         max(col("ms")).as("end_ms"))
       .withColumn("duration_ms", col("end_ms") - col("start_ms"))
-
-  /** Per-user summary over [[sessions]]: session count, total events,
-   * longest session (by events), and total active time. */
-  def userSummary(ev: DataFrame, gapMs: Long): DataFrame =
-    sessions(ev, gapMs)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_sessions"),
-        sum(col("n_events")).as("n_events"),
-        max(col("n_events")).as("max_session_events"),
-        sum(col("duration_ms")).as("active_ms"))
 }

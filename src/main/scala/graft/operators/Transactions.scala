@@ -32,12 +32,6 @@ object Transactions {
     env.join(aborted, col("txn_group") === col("txn_id"), "left_anti")
   }
 
-  /** T3 inverse — messages swallowed by aborted transactions. */
-  def abortedMessages(env: DataFrame, txnStatus: DataFrame): DataFrame = {
-    val aborted = txnStatus.filter(col("status") === "ABORTED").select(col("txn_id"))
-    env.join(aborted, col("txn_group") === col("txn_id"), "left_semi")
-  }
-
   /** T2 — coordinator status ledger derived deterministically for the
    * fixture: every 4th txn group aborts. */
   def fixtureStatus(env: DataFrame): DataFrame =

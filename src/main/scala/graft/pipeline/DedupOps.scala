@@ -230,16 +230,6 @@ object DedupOps {
     shRows.groupBy(col("doc")).agg(
       array((0 until k).map(i => min(affineHash(col("h"), i))): _*).as("sig"))
 
-  /** MinHash signature of a text column: k min-hashes over its n-gram
-   * shingles (array form, for per-row use; the relational paths above are
-   * the corpus-scale layout). */
-  def minhashSignature(text: Column, n: Int, k: Int): Column = {
-    val base = transform(shingles(text, n), s => murmur3Positive(s, 0).cast("long"))
-    array((0 until k).map { i =>
-      array_min(transform(base, h => affineHash(h, i)))
-    }: _*)
-  }
-
   /**
    * MinHash + LSH banding: k-hash signatures split into `bands` bands of
    * k/bands rows; documents sharing any band bucket become candidate pairs,
@@ -828,10 +818,8 @@ object DedupOps {
   /** The containment join's CANDIDATE relation — distinct normalized
    * (doc_a, doc_b) pairs surviving the asymmetric prefix probe and the
    * directed size prune, BEFORE verification. Its cardinality is the
-   * operator's scale story (Σ_gram prefixDf·df work), so the rehearsal
-   * diagnostics count THIS relation rather than re-deriving one that
-   * could drift ([[graft.DedupScaleWalls]]); [[containmentPrefixJoin]]
-   * consumes it verbatim. */
+   * operator's scale story (Σ_gram prefixDf·df work);
+   * [[containmentPrefixJoin]] consumes it verbatim. */
   def containmentPrefixCandidates(sh: DataFrame, tPpm: Long,
       preSizes: Option[DataFrame] = None): DataFrame = {
     require(tPpm > 0 && tPpm <= 1000000, s"threshold ppm in (0, 1e6]: $tPpm")
@@ -864,9 +852,7 @@ object DedupOps {
 
   /** The Jaccard prefix join's CANDIDATE relation — (doc_a, doc_b,
    * size_a, size_b) pairs surviving the prefix equi-join plus the size
-   * and PPJoin positional prunes, BEFORE verification. Counted directly
-   * by the rehearsal diagnostics ([[graft.DedupScaleWalls]]) so the
-   * filed candidate numbers are the operator's own relation;
+   * and PPJoin positional prunes, BEFORE verification;
    * [[jaccardPrefixJoin]] consumes it verbatim. */
   def jaccardPrefixCandidates(sh: DataFrame, tPpm: Long): DataFrame = {
     require(tPpm > 0 && tPpm <= 1000000, s"threshold ppm in (0, 1e6]: $tPpm")

@@ -875,16 +875,4 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(intervalMs))
       .start()
-
-  /** Run a streaming DataFrame to a named in-memory table until all
-   * currently-available input is processed. */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode,
-      checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

@@ -33,15 +33,6 @@ object TopicStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(topicDir)
 
-  /** S5/O2 — non-durable reader from a start offset: the streaming scan
-   * plus a pushed-down predicate. */
-  def readerFrom(spark: SparkSession, topicDir: String, startOffset: Long): DataFrame =
-    subscribe(spark, topicDir).filter(col("msg_offset") >= startOffset)
-
-  /** S7 — multi-topic subscribe: union of per-topic streams. */
-  def subscribeMany(spark: SparkSession, topicDirs: Seq[String]): DataFrame =
-    topicDirs.map(subscribe(spark, _)).reduce(_ unionByName _)
-
   /**
    * S8 — pattern subscription WITH mid-stream topic auto-discovery: the
    * source is the whole namespace glob, and Structured Streaming's file

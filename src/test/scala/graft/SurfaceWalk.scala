@@ -19,7 +19,8 @@ import scala.util.Try
 /**
  * ONE walk of every declared query's plans at sf0.001, shared by the
  * whole-surface invariant specs (OracleHygieneSpec's rounding walk,
- * PlanShapeSpec's cartesian census). Building all 285 queries runs
+ * PlanShapeSpec's cartesian census, BuilderJobsSpec's count of the jobs
+ * each builder runs before any action). Building all 285 queries runs
  * their eager fixture-staging side effects (t1's parquet write, the
  * Lloyd training folds), so each suite re-walking the surface would
  * multiply real Spark jobs into every `sbt test` run — the walk runs
@@ -33,7 +34,7 @@ object SurfaceWalk {
 
   final case class Facts(roundOffenders: Seq[String], cartesian: Boolean,
       scalingBroadcasts: Seq[String], singlePartitionExchanges: Int,
-      globalWindowScans: Seq[String], failure: Option[String])
+      globalWindowScans: Seq[String], buildJobs: Int, failure: Option[String])
 
   /** The parquet tables whose row count scales with the corpus (TPC-H SF
    * tables + the pipeline tables). nation/region are absent by design:
@@ -538,17 +539,22 @@ object SurfaceWalk {
 
   lazy val facts: Map[String, Facts] = {
     val spark = TestSpark.spark
+    // memos left by earlier suites would spare a builder its jobs
+    CacheScope.releaseRun()
     val out = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val f = Try {
-        val qe = fn(spark, sf).queryExecution
+      // only the builder call is measured: its jobs are build jobs
+      val (built, record) = Measure(spark)(fn(spark, sf))(identity)
+      val jobs = record.build.jobs
+      val f = built.toTry.map { df =>
+        val qe = df.queryExecution
         val physical = qe.executedPlan.toString
         Facts(roundOffenders(qe.analyzed),
           physical.contains("CartesianProduct"),
           scalingBroadcasts(qe.analyzed),
           "Exchange SinglePartition".r.findAllIn(physical).size,
-          globalWindowScans(qe.analyzed), None)
+          globalWindowScans(qe.analyzed), jobs, None)
       }.recover { case e =>
-        Facts(Nil, cartesian = false, Nil, 0, Nil, Some(e.toString))
+        Facts(Nil, cartesian = false, Nil, 0, Nil, jobs, Some(e.toString))
       }.get
       CacheScope.releaseAll()
       name -> f

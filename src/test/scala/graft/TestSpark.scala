@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for all specs (Spark startup dominates test
@@ -10,23 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(4)
 
-  /** Runs `body` on the shared session and counts the Spark jobs started
-   * meanwhile. The listener bus is drained on both sides, so the count
-   * holds every job `body` submitted and none from before it. */
+  /** Runs `body` on the shared session and counts the Spark jobs it
+   * started, through [[Measure]]: the count holds every job `body`
+   * submitted and none from before it. A throw in `body` is rethrown. */
   def countingJobs[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val result =
-      try body
-      finally {
-        ListenerDrain.drain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-    (result, jobs.get)
+    val (result, record) = Measure(spark)(())(_ => body)
+    (result.fold(throw _, identity), record.action.jobs)
   }
 
   /** A keyed producer batch of `rows` messages (keys k0..k6) built for

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
  */
 class BuilderJobsSpec extends AnyFunSuite {
 
-  private val MaxBuildJobs = 554
+  // 554 or 555: m11_auto_produce's eager append, an AQE-planned write at
+  // Produce.scala:158, runs 10 or 11 jobs from one run to the next
+  private val MaxBuildJobs = 555
   private val MaxQueriesWithBuildJobs = 194
 
   test("query builders run no more build jobs than the ratchet allows") {

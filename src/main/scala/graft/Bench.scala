@@ -105,7 +105,7 @@ object Bench {
     }
     // untimed spin-up: JVM/codegen/parquet-footer startup shouldn't be
     // attributed to whichever query happens to run first
-    try spark.read.parquet(s"$sfDir/events.parquet").count()
+    try graft.sources.GraftIO.fixture(spark, sfDir, "events").count()
     catch { case t: Throwable => println(s"BENCHW spinup FAILED=$t") }
     // TIMED, NAMED warmup: run-scoped shared derivations (the envelope
     // view ~80 queries start from; the LSH verified-pair relation p15/p18

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.GraftIO
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -187,7 +188,7 @@ object ScaleGen {
       s"docMode must be family|distinct, got $docMode")
     val spark = GraftSession.local(GraftSession.cpus)
     tables.foreach { t =>
-      val in = spark.read.parquet(s"$src/$t.parquet")
+      val in = GraftIO.fixture(spark, src, t)
       val outDf =
         if (t == "embeddings") replicateEmbeddings(in, factor)
         else if (t == "documents" && docMode == "distinct")
@@ -200,7 +201,7 @@ object ScaleGen {
       outDf.write.mode("overwrite").parquet(s"$out/$t.parquet")
       // count the WRITTEN files (footer metadata), not the derivation —
       // re-running the explode pipeline just for a log line doubles the cost
-      println(s"[scalegen] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
+      println(s"[scalegen] $t: ${GraftIO.fixture(spark, out, t).count()} rows")
     }
     spark.stop()
   }

@@ -9,7 +9,8 @@ object SparkEntry {
   /** Session settings every query needs regardless of who built the
    * SparkSession (the driver smoke-checks `entry` with its own). */
   def prepare(spark: SparkSession): SparkSession = {
-    // The driver's events.ts is parquet TIMESTAMP(NANOS); surface as LONG.
+    // A parquet TIMESTAMP(NANOS) column (EventLog.raw accepts an events.ts
+    // of that type; the fixtures write MICROS) surfaces as an epoch LONG.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Naive parquet timestamps (orders/lineitem dates) as TIMESTAMP in the
     // UTC session, not TIMESTAMP_NTZ — keeps unix_millis/date arithmetic

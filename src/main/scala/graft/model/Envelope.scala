@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.sources.GraftIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -94,18 +95,17 @@ object EventLog {
 
   /**
    * Read the raw events table for a scale-factor dir, with `ts` ALWAYS
-   * surfaced as an epoch-nanos LONG. The driver's fixture has shipped
-   * `ts` as both parquet TIMESTAMP(NANOS) (which Spark's reader rejects
-   * unless `nanosAsLong` surfaces it as a LONG) and TIMESTAMP(MICROS)
-   * (a plain Spark TimestampType) across generator versions — the
-   * engine normalizes either to the same integral column, so all time
+   * surfaced as an epoch-nanos LONG. The fixtures write `ts` as parquet
+   * TIMESTAMP(MICROS) (a plain Spark TimestampType); a TIMESTAMP(NANOS)
+   * file reads as a LONG under the `nanosAsLong` that
+   * [[graft.SparkEntry.prepare]] sets (without it Spark rejects the
+   * column). Either becomes the same integral column, so all time
    * arithmetic downstream stays exact and the DuckDB oracle's
    * `epoch_ms(ts)` view agrees bit for bit. (Micros → nanos is ×1000 on
    * a BIGINT — exact; a double round-trip would lose bits above 2^53.)
    */
   def raw(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/events.parquet")
+    val df = GraftIO.fixture(spark, sfDir, "events")
     df.schema("ts").dataType match {
       case LongType => df // TIMESTAMP(NANOS) read as epoch-nanos long
       case _ => df.withColumn("ts", unix_micros(col("ts")) * 1000L)

@@ -95,11 +95,13 @@ object Hnsw {
    * keeps the graph CONNECTED across cells (a purely cell-local graph
    * is a disjoint union of per-cell components, and the first build of
    * this index measured recall 0.07 exactly because the walk could
-   * never leave the entry's cell). Centroid-scale: |C|·(adj+1) rows. */
+   * never leave the entry's cell). Centroid-scale: |C|·(adj+1) rows.
+   * `qcents` comes unhinted: the self-join hints its own sides, and a
+   * hint under the union below would only be dropped with a warning. */
   def cellAdjacency(qcents: DataFrame, adj: Int): DataFrame = {
     val w = Window.partitionBy(col("cell")).orderBy(col("cdist"),
       col("cand_cell"))
-    val near = qcents.as("x").join(qcents.as("y"),
+    val near = broadcast(qcents).as("x").join(broadcast(qcents).as("y"),
         col("x.centroid_id") =!= col("y.centroid_id"))
       .select(col("x.centroid_id").as("cell"),
         col("y.centroid_id").as("cand_cell"),
@@ -264,8 +266,8 @@ object Hnsw {
    * transform once PER PAIR (×|centroids|) instead of once per row. */
   def assignedNodes(vecs: DataFrame, centroids: DataFrame,
       maxLevel: Int): DataFrame = {
-    val qcents = broadcast(centroids.select(col("centroid_id"),
-      q3Codes(col("cembedding")).as("ccodes")))
+    val qcents = centroids.select(col("centroid_id"),
+      q3Codes(col("cembedding")).as("ccodes"))
     val coded = graft.CacheScope.track(vecs.select(col("vec_id"),
       q3Codes(col("embedding")).as("codes")))
     withLevel(assignCells(coded, qcents), maxLevel)
@@ -285,8 +287,8 @@ object Hnsw {
       cellAdj: Int = 2, hopsPerLevel: Int = 2,
       preAssigned: Option[DataFrame] = None): DataFrame = {
     require(m > 0 && ef >= k && k > 0 && maxLevel >= 1 && beamSteps >= 1)
-    val qcents = broadcast(centroids.select(col("centroid_id"),
-      q3Codes(col("cembedding")).as("ccodes")))
+    val qcents = centroids.select(col("centroid_id"),
+      q3Codes(col("cembedding")).as("ccodes"))
     val assigned = preAssigned.getOrElse(graft.CacheScope.track(
       assignedNodes(vecs, centroids, maxLevel)))
     val coded = assigned.select(col("vec_id"), col("codes"))
@@ -324,15 +326,8 @@ object Hnsw {
         .select(col("src"), col("dst"))
     }.toMap
 
-    val queries = broadcast(graft.CacheScope.track(
-      coded.filter(col("vec_id") < queryMax)
-        .select(col("vec_id").as("qid"), col("codes").as("qcodes"))))
-    // entry: the global max-level node, ties to the smallest id
-    val entry = broadcast(assigned
-      .orderBy(col("level").desc, col("vec_id")).limit(1)
-      .select(col("vec_id").as("node")))
-    recallOf(beamSearch(edges, queries, entry, nodeCodes, maxLevel,
-      hopsPerLevel, beamSteps, ef, k), coded, queries, k)
+    walkRecall(edges, assigned, coded, nodeCodes, queryMax, maxLevel,
+      hopsPerLevel, beamSteps, ef, k)
   }
 
   /** The two-phase HNSW walk over a prebuilt per-level edge map: fixed
@@ -404,11 +399,24 @@ object Hnsw {
       .select(col("qid"), explode(col("tk")).as("p"))
       .select(col("qid"), col("p.dst").as("node"))
 
-  /** Per-query hits/recall of `approx` against the exact integer-metric
-   * top-k over `coded` (self excluded on both sides). */
-  private def recallOf(approx: DataFrame, coded: DataFrame,
-      queries: DataFrame, k: Int): DataFrame = {
-    val exact = coded.crossJoin(queries)
+  /** Per-query hits/recall of the [[beamSearch]] top-k from the global
+   * max-level node of `levels` (ties to the smallest id) against the
+   * exact integer-metric top-k over `coded` (self excluded on both
+   * sides), for the queries vec_id < queryMax. `queries` is hinted only
+   * where it is a join's build side: Spark drops a broadcast hint on the
+   * preserved side of the left join below. */
+  private def walkRecall(edges: Map[Int, DataFrame], levels: DataFrame,
+      coded: DataFrame, nodeCodes: DataFrame, queryMax: Long, maxLevel: Int,
+      hopsPerLevel: Int, beamSteps: Int, ef: Int, k: Int): DataFrame = {
+    val queries = graft.CacheScope.track(
+      coded.filter(col("vec_id") < queryMax)
+        .select(col("vec_id").as("qid"), col("codes").as("qcodes")))
+    val entry = broadcast(levels
+      .orderBy(col("level").desc, col("vec_id")).limit(1)
+      .select(col("vec_id").as("node")))
+    val approx = beamSearch(edges, broadcast(queries), entry, nodeCodes,
+      maxLevel, hopsPerLevel, beamSteps, ef, k)
+    val exact = coded.crossJoin(broadcast(queries))
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"),
         GraftFunctions.l2SqLong(col("qcodes"), col("codes")).as("dist"),
@@ -461,8 +469,8 @@ object Hnsw {
       hopsPerLevel: Int = 2, preAssigned: Option[DataFrame] = None):
       DataFrame = {
     require(m > 0 && ef >= k && k > 0 && maxLevel >= 1 && beamSteps >= 1)
-    val qcents = broadcast(centroids.select(col("centroid_id"),
-      q3Codes(col("cembedding")).as("ccodes")))
+    val qcents = centroids.select(col("centroid_id"),
+      q3Codes(col("cembedding")).as("ccodes"))
     // the is_new tag is a projection over the (possibly shared, cached)
     // assigned relation — the batch predicate only reads vec_id
     val assigned = preAssigned.getOrElse(graft.CacheScope.track(
@@ -502,14 +510,8 @@ object Hnsw {
         .select(col("src"), col("dst"))
     }.toMap
 
-    val queries = broadcast(graft.CacheScope.track(
-      coded.filter(col("vec_id") < queryMax)
-        .select(col("vec_id").as("qid"), col("codes").as("qcodes"))))
-    val entry = broadcast(assigned
-      .orderBy(col("level").desc, col("vec_id")).limit(1)
-      .select(col("vec_id").as("node")))
-    val audit = recallOf(beamSearch(edges, queries, entry, nodeCodes,
-      maxLevel, hopsPerLevel, beamSteps, ef, k), coded, queries, k)
+    val audit = walkRecall(edges, assigned, coded, nodeCodes, queryMax,
+      maxLevel, hopsPerLevel, beamSteps, ef, k)
 
     // append census: batch size, appended directed edges (out + reverse),
     // and (level, node) lists the Mmax cap had to prune. Same values as
@@ -623,14 +625,8 @@ object Hnsw {
         .select(col("src"), explode(col("tk")).as("p"))
         .select(col("src"), col("p.dst").as("dst")))
     }.toMap
-    val queries = broadcast(graft.CacheScope.track(
-      coded.filter(col("vec_id") < queryMax)
-        .select(col("vec_id").as("qid"), col("codes").as("qcodes"))))
-    val entry = broadcast(nodes
-      .orderBy(col("level").desc, col("vec_id")).limit(1)
-      .select(col("vec_id").as("node")))
-    val audit = recallOf(beamSearch(edges, queries, entry, nodeCodes,
-      maxLevel, hopsPerLevel, beamSteps, ef, k), coded, queries, k)
+    val audit = walkRecall(edges, nodes, coded, nodeCodes, queryMax,
+      maxLevel, hopsPerLevel, beamSteps, ef, k)
     val nNew = nodes.filter(col("is_new"))
       .agg(count(lit(1)).as("n_new_nodes"))
     val nAppended = et.filter(col("is_new"))

@@ -1106,8 +1106,10 @@ object Similarity {
     val approx = ivfpqTopK(queries, corpus, centroids, codebooks, dsub,
         k, nprobe)
       .select(col("query_id"), col("neighbor_id"))
-    val qc = broadcast(withQ3(queries)
-      .select(col("vec_id").as("query_id"), col("codes").as("qcodes")))
+    // hinted only where it builds a join: Spark drops a broadcast hint
+    // on the preserved side of the left joins below
+    val qc = withQ3(queries)
+      .select(col("vec_id").as("query_id"), col("codes").as("qcodes"))
     // ONE shared ranking kernel for both exact sides — tie-break and
     // k-bound conventions cannot drift between the two recall numbers.
     // Input: (query_id, vec_id, qcodes, codes) candidates.
@@ -1125,7 +1127,8 @@ object Similarity {
     // otherwise inline the interpreted q3 HOF per PAIR)
     val cc = graft.CacheScope.track(
       withQ3(corpus).select(col("vec_id"), col("codes")))
-    val exact = exactTopK(cc.join(qc, col("query_id") =!= col("vec_id")))
+    val exact = exactTopK(cc.join(broadcast(qc),
+      col("query_id") =!= col("vec_id")))
     val probes = ivfProbes(queries, centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("cluster"),
         col("codes").as("qcodes"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.Exact
 import graft.pipeline.{CorpusOps, Retrieval}
+import graft.sources.GraftIO.fixture
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,22 +17,7 @@ import org.apache.spark.sql.functions._
  */
 object CorpusQueries extends QueryGroup {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-
-  /** DuckDB mirror of TextOps.normalized / TextOps.words (same strings as
-   * PipelineQueries — kept private there, restated here). */
-  // coalesced: NULL text normalizes like '' (the library-wide convention,
-  // matching TextOps.fingerprint/wordNGrams), so no oracle can diverge on
-  // a NULL-text row
-  private val NORM =
-    "trim(regexp_replace(lower(coalesce(text, '')), '[^a-z0-9]+', ' ', 'g'))"
-  private val WORDS = s"string_split($NORM, ' ')"
-  // historical aliases (same expression since the coalesce moved into NORM)
-  private val NORMC = NORM
-  private val WORDSC = WORDS
+  import PipelineQueries.{NORM, WORDS}
 
   // ------------------------------------------------- p21 repetition stats
 
@@ -40,7 +26,7 @@ object CorpusQueries extends QueryGroup {
     // (zero shuffle); the oracle re-derives it the heavyweight way —
     // unnest + group-count + max — so parity checks the algorithm, not a
     // shared formulation.
-    (s, d) => CorpusOps.repetitionStats(docs(s, d), "doc_id", "text")
+    (s, d) => CorpusOps.repetitionStats(fixture(s, d, "documents"), "doc_id", "text")
       .orderBy(col("doc_id")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents),
       |f AS (
@@ -71,7 +57,7 @@ object CorpusQueries extends QueryGroup {
   /** Deterministic PII injection so the fixture actually contains emails /
    * IPs / phones with data-dependent presence (documents are word salad). */
   private def piiPayload(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).withColumn("payload", concat(
+    fixture(s, dir, "documents").withColumn("payload", concat(
       col("text"),
       when(col("doc_id") % 3 =!= 0,
         concat(lit(" contact user"), col("doc_id").cast("string"),
@@ -115,7 +101,7 @@ object CorpusQueries extends QueryGroup {
     "CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0 THEN '19' ELSE '33' END"
 
   private val p23 = QueryDef(
-    (s, d) => CorpusOps.stratifiedSample(docs(s, d),
+    (s, d) => CorpusOps.stratifiedSample(fixture(s, d, "documents"),
       stratum = col("source"),
       threshold = when(substring(col("source"), 4, 10).cast("int") % 2 === 0,
         lit("19")).otherwise(lit("33")),
@@ -137,7 +123,7 @@ object CorpusQueries extends QueryGroup {
   private val mixBudget = 1500L
 
   private val p24 = QueryDef(
-    (s, d) => CorpusOps.tokenBudgetMix(docs(s, d),
+    (s, d) => CorpusOps.tokenBudgetMix(fixture(s, d, "documents"),
       stratum = col("source"), budget = mixBudget,
       id = col("doc_id"), text = col("text"))
       .orderBy(col("stratum")),
@@ -161,7 +147,7 @@ object CorpusQueries extends QueryGroup {
   /** Held-out "benchmark" slice: every 50th document. */
   private val p25 = QueryDef(
     (s, d) => {
-      val all = docs(s, d)
+      val all = fixture(s, d, "documents")
       CorpusOps.decontaminate(
         corpus = all.filter(col("doc_id") % 50 =!= 0),
         benchmark = all.filter(col("doc_id") % 50 === 0),
@@ -187,7 +173,7 @@ object CorpusQueries extends QueryGroup {
   private val chunkWords = 20
 
   private val p26 = QueryDef(
-    (s, d) => CorpusOps.chunkDupStats(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.chunkDupStats(fixture(s, d, "documents"), "doc_id", "text",
       "source", chunkWords).orderBy(col("source")),
     Some(s"""WITH w AS (SELECT doc_id, source, $WORDS AS ws FROM documents),
       |c AS (
@@ -211,7 +197,7 @@ object CorpusQueries extends QueryGroup {
   // -------------------------------------- p27 embedding quantization
 
   private val p27 = QueryDef(
-    (s, d) => CorpusOps.quantizeStats(embs(s, d), "vec_id", "embedding")
+    (s, d) => CorpusOps.quantizeStats(fixture(s, d, "embeddings"), "vec_id", "embedding")
       .orderBy(col("vec_id")),
     Some("""WITH q AS (
       |  SELECT vec_id,
@@ -254,7 +240,7 @@ object CorpusQueries extends QueryGroup {
       " AND sym <= 0.1 AND alpha >= 0.8 AND stop_hits >= 2)"
 
   private val p29 = QueryDef(
-    (s, d) => CorpusOps.gopherFilter(docs(s, d), "doc_id", "text")
+    (s, d) => CorpusOps.gopherFilter(fixture(s, d, "documents"), "doc_id", "text")
       .orderBy(col("doc_id")),
     Some(s"""WITH f AS (
       |  SELECT doc_id, text, $WORDS AS ws, $NORM AS norm,
@@ -273,7 +259,7 @@ object CorpusQueries extends QueryGroup {
   // ------------------------------------------------- p30 tf-idf keywords
 
   private val p30 = QueryDef(
-    (s, d) => CorpusOps.tfidfKeywords(docs(s, d), "doc_id", "text", k = 3)
+    (s, d) => CorpusOps.tfidfKeywords(fixture(s, d, "documents"), "doc_id", "text", k = 3)
       .orderBy(col("doc_id"), col("rank")),
     Some(s"""WITH t AS (
       |  SELECT doc_id, unnest(list_filter($WORDS, w -> length(w) > 0)) AS word
@@ -295,7 +281,7 @@ object CorpusQueries extends QueryGroup {
   // ------------------------------------------------------- p31 novelty
 
   private val p31 = QueryDef(
-    (s, d) => CorpusOps.noveltyStats(docs(s, d), "doc_id", "text", n = 3)
+    (s, d) => CorpusOps.noveltyStats(fixture(s, d, "documents"), "doc_id", "text", n = 3)
       .orderBy(col("doc_id")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents),
       |g AS (
@@ -325,7 +311,7 @@ object CorpusQueries extends QueryGroup {
     // reduced to per-source survivor stats with an exact-membership
     // digest. The oracle recomposes all three stages in SQL.
     (s, d) => {
-      val all = docs(s, d)
+      val all = fixture(s, d, "documents")
       CorpusOps.curationPipeline(
         corpus = all.filter(col("doc_id") % 50 =!= 0),
         benchmark = all.filter(col("doc_id") % 50 === 0),
@@ -380,7 +366,7 @@ object CorpusQueries extends QueryGroup {
     // only its first corpus occurrence (by doc id, then position) and
     // each document is rebuilt from its survivors. The digest prices the
     // rebuilt text byte-for-byte.
-    (s, d) => CorpusOps.chunkScrub(docs(s, d), "doc_id", "text", chunkWords)
+    (s, d) => CorpusOps.chunkScrub(fixture(s, d, "documents"), "doc_id", "text", chunkWords)
       .orderBy(col("doc_id")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents),
       |c AS (
@@ -411,7 +397,7 @@ object CorpusQueries extends QueryGroup {
     // membership digest makes the exact sample checkable. NULL text is
     // coalesced on BOTH sides (key hash and weight) so a NULL-text doc
     // gets the same key and weight in Spark and DuckDB.
-    (s, d) => CorpusOps.weightedSample(docs(s, d), col("source"),
+    (s, d) => CorpusOps.weightedSample(fixture(s, d, "documents"), col("source"),
       weight = coalesce(graft.pipeline.TextOps.tokenCount(col("text")),
         lit(1)) + lit(1),
       k = 10, id = col("doc_id"), text = col("text"))
@@ -442,7 +428,7 @@ object CorpusQueries extends QueryGroup {
     // function of the deterministic hash set, so the oracle reproduces
     // it exactly — no approximation tolerance needed.
     (s, d) => {
-      val grams = docs(s, d).select(col("source"),
+      val grams = fixture(s, d, "documents").select(col("source"),
         explode(graft.pipeline.TextOps.wordNGrams(col("text"), 3)).as("gram"))
       graft.pipeline.Sketches.kmvDistinctVerified(grams, col("source"),
         graft.pipeline.Sketches.md5Hash32(col("gram")), kmvK)
@@ -479,7 +465,7 @@ object CorpusQueries extends QueryGroup {
     // register table — and therefore the estimate — is reproduced
     // bit-for-bit by the oracle; the float estimate rounds to 2 dp.
     (s, d) => {
-      val grams = graft.CacheScope.track(docs(s, d).select(col("source"),
+      val grams = graft.CacheScope.track(fixture(s, d, "documents").select(col("source"),
         explode(graft.pipeline.TextOps.wordNGrams(col("text"), 3)).as("gram")))
       val est = graft.pipeline.Sketches.hllDistinct(grams, col("source"),
         graft.pipeline.Sketches.md5Hash60(col("gram")))
@@ -531,7 +517,7 @@ object CorpusQueries extends QueryGroup {
       // conditional gate-scale spread before the word explode — the
       // cached word relation fans out to the sketch and the exact side
       val words = graft.CacheScope.track(
-        graft.pipeline.Spread.ifNarrow(docs(s, d), col("doc_id"))
+        graft.pipeline.Spread.ifNarrow(fixture(s, d, "documents"), col("doc_id"))
         .select(explode(graft.pipeline.TextOps.words(
           coalesce(col("text"), lit("")))).as("word"))
         .filter(length(col("word")) > 0))
@@ -545,7 +531,7 @@ object CorpusQueries extends QueryGroup {
         .orderBy(col("est_count").desc, col("item")).limit(20)
     },
     Some(s"""WITH ww AS (
-      |  SELECT unnest($WORDSC) AS word FROM documents),
+      |  SELECT unnest($WORDS) AS word FROM documents),
       |wd AS (SELECT word FROM ww WHERE len(word) > 0),
       |k AS (SELECT word, i,
       |        CAST(('0x' || substr(md5(word || '#' || CAST(i AS VARCHAR)),
@@ -574,8 +560,8 @@ object CorpusQueries extends QueryGroup {
     // express. Per-source rollup keeps the output compact while the
     // per-doc digests stay inside the aggregation.
     (s, d) => graft.pipeline.CorpusOps
-      .repeatedSpanScrub(docs(s, d), "doc_id", "text", n = 5, minCount = 3)
-      .join(docs(s, d).select(col("doc_id"), col("source"))
+      .repeatedSpanScrub(fixture(s, d, "documents"), "doc_id", "text", n = 5, minCount = 3)
+      .join(fixture(s, d, "documents").select(col("doc_id"), col("source"))
         .hint("merge"), Seq("doc_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -587,7 +573,7 @@ object CorpusQueries extends QueryGroup {
       .orderBy(col("source")),
     Some(s"""WITH w AS (
       |  SELECT doc_id, source,
-      |         list_filter($WORDSC, x -> len(x) > 0) AS ws
+      |         list_filter($WORDS, x -> len(x) > 0) AS ws
       |  FROM documents),
       |t AS (SELECT doc_id, CAST(pos - 1 AS INT) AS pos, ws[CAST(pos AS INT)] AS word
       |      FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS pos FROM w)),
@@ -624,7 +610,7 @@ object CorpusQueries extends QueryGroup {
     // the rest the existing corpus; classify each new doc as
     // dup_of_base / dup_in_batch / fresh with its representative.
     (s, d) => {
-      val all = docs(s, d)
+      val all = fixture(s, d, "documents")
       CorpusOps.incrementalDedup(
         newDocs = all.filter(col("doc_id") % 10 === 0),
         base = all.filter(col("doc_id") % 10 =!= 0),
@@ -655,7 +641,7 @@ object CorpusQueries extends QueryGroup {
   private val p36 = QueryDef(
     // Training-sequence packing: concatenate per source in id order,
     // split at fixed token budgets, emit each doc's placement lineage.
-    (s, d) => CorpusOps.sequencePack(docs(s, d), col("source"), packBudget,
+    (s, d) => CorpusOps.sequencePack(fixture(s, d, "documents"), col("source"), packBudget,
       col("doc_id"), col("text"))
       .orderBy(col("stratum"), col("doc_id")),
     Some(s"""WITH t AS (
@@ -716,7 +702,7 @@ object CorpusQueries extends QueryGroup {
       // MIN_COUNT = 2) replays the same floor — hapax types are still
       // tokenized, they just earn no merges of their own
       graft.pipeline.BpeTokenizer
-        .tokenize(docs(s, d), "doc_id", "text", numMerges = 50,
+        .tokenize(fixture(s, d, "documents"), "doc_id", "text", numMerges = 50,
           minCount = 2L).toDF()
     }
 
@@ -739,8 +725,8 @@ object CorpusQueries extends QueryGroup {
       |          WHEN sum(len(coalesce(text, ''))) = 149174
       |            THEN 'sf0.01' ELSE 'sf0.1' END AS tag FROM documents),
       |base AS (SELECT doc_id,
-      |    CAST(len(list_filter($WORDSC, x -> x <> '')) AS BIGINT) AS n_words,
-      |    md5($NORMC) AS detok_md5
+      |    CAST(len(list_filter($WORDS, x -> x <> '')) AS BIGINT) AS n_words,
+      |    md5($NORM) AS detok_md5
       |  FROM documents)
       |SELECT b.doc_id, b.n_words, CAST(e.n_tokens AS BIGINT) AS n_tokens,
       |       e.tokens_md5, b.detok_md5
@@ -756,7 +742,7 @@ object CorpusQueries extends QueryGroup {
     // pure integer arithmetic (num·n + den − 1) div den. The oracle
     // takes the OPPOSITE route (full sort + row_number) so parity checks
     // the selection algorithm, not a shared formulation.
-    (s, d) => CorpusOps.exactQuantiles(docs(s, d), col("source"),
+    (s, d) => CorpusOps.exactQuantiles(fixture(s, d, "documents"), col("source"),
       col("n_chars"), Seq((1, 2), (9, 10), (99, 100)))
       .orderBy(col("source"), col("q")),
     Some("""WITH q(qnum, qden) AS (VALUES (1, 2), (9, 10), (99, 100)),
@@ -786,14 +772,14 @@ object CorpusQueries extends QueryGroup {
     // row; false_positives is the filter's honest error mass).
     (s, d) => {
       val m = 16384; val k = 4
-      val words = graft.CacheScope.track(docs(s, d)
+      val words = graft.CacheScope.track(fixture(s, d, "documents")
         .select(col("source"),
           explode(graft.pipeline.TextOps.words(
             coalesce(col("text"), lit("")))).as("word"))
         .filter(length(col("word")) > 0).distinct())
       val bits = graft.pipeline.Sketches.bloomBits(
         words, col("source"), col("word"), m, k)
-      val zh = docs(s, d).where(col("lang") === "zh")
+      val zh = fixture(s, d, "documents").where(col("lang") === "zh")
         .select(explode(graft.pipeline.TextOps.words(
           coalesce(col("text"), lit("")))).as("item"))
         .filter(length(col("item")) > 0).distinct()
@@ -905,9 +891,9 @@ object CorpusQueries extends QueryGroup {
   private def lmScored(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:lm-scored:$d") {
-      CorpusOps.lmPerplexity(docs(s, d),
-          docs(s, d).where(col("lang") === "en"), "doc_id", "text")
-        .join(docs(s, d).select(col("doc_id"), col("lang"))
+      CorpusOps.lmPerplexity(fixture(s, d, "documents"),
+          fixture(s, d, "documents").where(col("lang") === "en"), "doc_id", "text")
+        .join(fixture(s, d, "documents").select(col("doc_id"), col("lang"))
           .hint("merge"), Seq("doc_id"))
     }
 
@@ -981,7 +967,7 @@ object CorpusQueries extends QueryGroup {
     // 3-grams seen anywhere in the train slice. Integer counts + one
     // 4-dp ratio; the oracle recomputes both gram relations from
     // scratch.
-    (s, d) => CorpusOps.ngramOverlap(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.ngramOverlap(fixture(s, d, "documents"), "doc_id", "text",
         isTrain = col("doc_id") % 10 < 8, n = 3)
       .orderBy(col("doc_id")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents),
@@ -1010,7 +996,7 @@ object CorpusQueries extends QueryGroup {
     // rules. Per-element p·ln p e6-quantized before the INTEGER sum
     // (a rounded float sum is partial-aggregation-order-dependent —
     // the p54/p79 class), 4 dp via exact-integer rounding.
-    (s, d) => CorpusOps.charEntropy(docs(s, d), "doc_id", "text")
+    (s, d) => CorpusOps.charEntropy(fixture(s, d, "documents"), "doc_id", "text")
       .orderBy(col("doc_id")),
     Some(s"""WITH ch AS (
       |  SELECT doc_id, c FROM (
@@ -1046,7 +1032,7 @@ object CorpusQueries extends QueryGroup {
     // exact quantiles in SketchSpec).
     (s, d) => {
       val b = graft.pipeline.Sketches.ddBuckets(
-        docs(s, d), col("source"), col("n_chars"), ddAlpha)
+        fixture(s, d, "documents"), col("source"), col("n_chars"), ddAlpha)
       graft.pipeline.Sketches.ddQuantiles(b, Seq(0.5, 0.9, 0.99), ddAlpha)
         .orderBy(col("source"), col("q"))
     },
@@ -1082,8 +1068,8 @@ object CorpusQueries extends QueryGroup {
     // a value cutoff at the 100th-highest score (boundary ties keep).
     // The oracle rebuilds both bucket models, every per-doc score, and
     // the cutoff from scratch.
-    (s, d) => CorpusOps.dsirSelect(docs(s, d),
-        docs(s, d).where(col("lang") === "en"), "doc_id", "text",
+    (s, d) => CorpusOps.dsirSelect(fixture(s, d, "documents"),
+        fixture(s, d, "documents").where(col("lang") === "en"), "doc_id", "text",
         m = 1024, topK = 100)
       .orderBy(col("doc_id")),
     Some(s"""WITH cw AS (SELECT doc_id, lang, $WORDS AS ws FROM documents),
@@ -1127,7 +1113,7 @@ object CorpusQueries extends QueryGroup {
     // by the opposite algorithm (full sort + row_number), so parity
     // checks both the scoring arithmetic and the selection.
     (s, d) => CorpusOps.percentileQualityGate(
-        docs(s, d).withColumn("text", coalesce(col("text"), lit(""))),
+        fixture(s, d, "documents").withColumn("text", coalesce(col("text"), lit(""))),
         "doc_id", "text", "source", qnum = 30, qden = 100)
       .orderBy(col("doc_id")),
     Some(s"""WITH f AS (
@@ -1161,7 +1147,7 @@ object CorpusQueries extends QueryGroup {
     // reproducible "write the training set" stage. The oracle replays
     // every hash and the per-shard position window.
     (s, d) => CorpusOps.mixtureShardPlan(
-        docs(s, d).withColumn("mix",
+        fixture(s, d, "documents").withColumn("mix",
           when(col("lang") === "en", "en").when(col("lang") === "de", "de")
             .otherwise("rest")),
         "doc_id", "mix", Map("en" -> 3, "de" -> 2, "rest" -> 1), shards = 16)
@@ -1200,7 +1186,7 @@ object CorpusQueries extends QueryGroup {
     // every engine — no libm-pow variance): per-source token mass → raw
     // share vs temperature share (ppm) and the expected slice of a 1M
     // token budget. The oracle replays the arithmetic from the raw text.
-    (s, d) => CorpusOps.temperatureMix(docs(s, d), col("source"),
+    (s, d) => CorpusOps.temperatureMix(fixture(s, d, "documents"), col("source"),
         col("text"), budgetTokens = 1000000L)
       .orderBy(col("grp")),
     Some(s"""WITH m AS (
@@ -1226,7 +1212,7 @@ object CorpusQueries extends QueryGroup {
     // hapax mass, TTR, and the single-point Heaps exponent — cross-doc
     // template-spam signals the per-doc filters can't see. The oracle
     // rebuilds the (source, word) relation and every ratio from raw text.
-    (s, d) => CorpusOps.vocabStats(docs(s, d), col("source"), col("text"))
+    (s, d) => CorpusOps.vocabStats(fixture(s, d, "documents"), col("source"), col("text"))
       .orderBy(col("stratum")),
     Some(s"""WITH w AS (
       |  SELECT source AS stratum,
@@ -1254,7 +1240,7 @@ object CorpusQueries extends QueryGroup {
     // Jaccard, hit count), not p25's binary any-overlap flag. The
     // oracle brute-forces every candidate pair's exact Jaccard.
     (s, d) => {
-      val all = docs(s, d)
+      val all = fixture(s, d, "documents")
       CorpusOps.jaccardDecontaminate(
         corpus = all.filter(col("doc_id") % 50 =!= 0),
         bench = all.filter(col("doc_id") % 50 === 0),
@@ -1295,7 +1281,7 @@ object CorpusQueries extends QueryGroup {
     (s, d) => {
       val tok = bpeTokens(s, d)
         .select(col("doc_id"), col("n_words"), col("n_tokens"))
-      docs(s, d).select(col("doc_id"), col("source"), col("n_chars"))
+      fixture(s, d, "documents").select(col("doc_id"), col("source"), col("n_chars"))
         .join(tok.hint("merge"), Seq("doc_id"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1317,7 +1303,7 @@ object CorpusQueries extends QueryGroup {
       |          WHEN sum(len(coalesce(text, ''))) = 149174
       |            THEN 'sf0.01' ELSE 'sf0.1' END AS tag FROM documents),
       |base AS (SELECT doc_id, source, n_chars,
-      |    CAST(len(list_filter($WORDSC, x -> x <> '')) AS BIGINT) AS n_words
+      |    CAST(len(list_filter($WORDS, x -> x <> '')) AS BIGINT) AS n_words
       |  FROM documents),
       |j AS (SELECT b.source, b.n_chars, b.n_words, e.n_tokens
       |      FROM base b JOIN exp e
@@ -1345,7 +1331,7 @@ object CorpusQueries extends QueryGroup {
     // sketches and every estimate bit-for-bit; accuracy vs exact is a
     // SketchSpec property.
     (s, d) => graft.pipeline.Sketches.kmvSetOps(
-      docs(s, d).select(col("lang"),
+      fixture(s, d, "documents").select(col("lang"),
         explode(graft.pipeline.TextOps.wordNGrams(col("text"), 3)).as("g")),
       col("lang"), col("g"), k = 256, grpA = "en", grpB = "de"),
     Some(s"""WITH w AS (SELECT lang AS g0, $WORDS AS ws FROM documents
@@ -1394,7 +1380,7 @@ object CorpusQueries extends QueryGroup {
     // doc's own token list by hashed index. The oracle replays every
     // hash decision and the replacement lookup.
     (s, d) => CorpusOps.mlmMaskPlan(
-        docs(s, d).filter(col("doc_id") % 10 === 0),
+        fixture(s, d, "documents").filter(col("doc_id") % 10 === 0),
         "doc_id", "text", maskPct = 15)
       .orderBy(col("doc_id"), col("pos")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents
@@ -1432,7 +1418,7 @@ object CorpusQueries extends QueryGroup {
     // explode+equi-join), and rebuilds each span digest with ordered
     // string_agg.
     (s, d) => CorpusOps.spanCorruptionPlan(
-        docs(s, d), "doc_id", "text", startPerMil = 50, maxSpan = 5)
+        fixture(s, d, "documents"), "doc_id", "text", startPerMil = 50, maxSpan = 5)
       .orderBy(col("doc_id"), col("sentinel")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents
       |         WHERE $NORM <> ''),
@@ -1477,7 +1463,7 @@ object CorpusQueries extends QueryGroup {
     // (CorpusOps.dedupImpact): cross-source duplicates charge every
     // source except the global-min-id representative's. kept_ppm is
     // integer division — the oracle replays it with DuckDB's `//`.
-    (s, d) => CorpusOps.dedupImpact(docs(s, d), "doc_id", "text", "source")
+    (s, d) => CorpusOps.dedupImpact(fixture(s, d, "documents"), "doc_id", "text", "source")
       .orderBy(col("source")),
     Some(s"""WITH f AS (
       |  SELECT source, doc_id, md5($NORM) AS fp,
@@ -1559,8 +1545,8 @@ object CorpusQueries extends QueryGroup {
   private def bm25Shared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:bm25-top10:$d") {
-      Retrieval.bm25TopK(docs(s, d),
-        docs(s, d).filter(col("doc_id") < 5), "doc_id", "text", k = 10)
+      Retrieval.bm25TopK(fixture(s, d, "documents"),
+        fixture(s, d, "documents").filter(col("doc_id") < 5), "doc_id", "text", k = 10)
     }
 
   // --------------------------------------------- p82 hybrid rank fusion
@@ -1579,7 +1565,7 @@ object CorpusQueries extends QueryGroup {
     (s, d) => {
       val bm = bm25Shared(s, d)
         .select(col("query_id"), col("doc_id"), col("rank"))
-      val e = s.read.parquet(s"$d/embeddings.parquet")
+      val e = fixture(s, d, "embeddings")
       val cos = graft.pipeline.Similarity
         .bruteForceTopK(e.filter(col("vec_id") < 5), e, k = 10)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
@@ -1630,7 +1616,7 @@ object CorpusQueries extends QueryGroup {
     // selection over the length histogram (p47's machinery); the oracle
     // takes the opposite route — full sort + row_number — then replays
     // the bucket routing, batch cuts, and the padding arithmetic.
-    (s, d) => CorpusOps.lengthBucketedBatchPlan(docs(s, d), "doc_id",
+    (s, d) => CorpusOps.lengthBucketedBatchPlan(fixture(s, d, "documents"), "doc_id",
       "text", nBuckets = 4, batchSize = 8).orderBy(col("bucket")),
     Some(s"""WITH t AS (SELECT doc_id AS did,
       |           CAST(len($WORDS) AS BIGINT) AS tokens FROM documents),
@@ -1664,7 +1650,7 @@ object CorpusQueries extends QueryGroup {
   private def nbScoredShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:nb-scored:$d") {
-      CorpusOps.nbScores(docs(s, d), "doc_id", "text", "lang")
+      CorpusOps.nbScores(fixture(s, d, "documents"), "doc_id", "text", "lang")
     }
 
   /** Shared NB oracle CTEs (through `score`): materializes the same
@@ -1761,7 +1747,7 @@ object CorpusQueries extends QueryGroup {
     // per-file zone-map report. The oracle replays the bucket clamp,
     // the bit interleave, and the per-file min/max spans with DuckDB's
     // own bit operators.
-    (s, d) => CorpusOps.zorderLayout(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.zorderLayout(fixture(s, d, "documents"), "doc_id", "text",
       "n_chars"),
     Some(s"""WITH dims AS (
       |  SELECT doc_id, CAST(n_chars AS BIGINT) AS nc,
@@ -1794,7 +1780,7 @@ object CorpusQueries extends QueryGroup {
     // −p·ln p (4-dp round — the charEntropy precedent for the one libm
     // call). The oracle rebuilds token counts from raw text and replays
     // the share arithmetic.
-    (s, d) => CorpusOps.sourceDiversity(docs(s, d), "source", "text")
+    (s, d) => CorpusOps.sourceDiversity(fixture(s, d, "documents"), "source", "text")
       .orderBy(col("source")),
     Some(s"""WITH ps AS (
       |  SELECT source, count(*) AS n_docs,
@@ -1814,7 +1800,7 @@ object CorpusQueries extends QueryGroup {
     // source pair + both asymmetric containment PPMs — which crawls are
     // re-crawling each other. The oracle rebuilds the distinct
     // (gram, source) relation and brute-counts every pair.
-    (s, d) => CorpusOps.sourceGramOverlap(docs(s, d), "source", "text", n = 5)
+    (s, d) => CorpusOps.sourceGramOverlap(fixture(s, d, "documents"), "source", "text", n = 5)
       .orderBy(col("source_a"), col("source_b")),
     Some(s"""WITH w AS (SELECT doc_id, source, $WORDS AS ws FROM documents),
       |g AS (
@@ -1844,7 +1830,7 @@ object CorpusQueries extends QueryGroup {
     // (8-token overlap), per-chunk spans + md5 digests. Zero-shuffle
     // in-row explode; the oracle replays the slice arithmetic with
     // DuckDB's inclusive-bound list_slice.
-    (s, d) => CorpusOps.chunkOverlapPlan(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.chunkOverlapPlan(fixture(s, d, "documents"), "doc_id", "text",
         window = 32, stride = 24)
       .orderBy(col("doc_id"), col("chunk_idx")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents),
@@ -1865,7 +1851,7 @@ object CorpusQueries extends QueryGroup {
     // runs floored at the word count (doc-level floor), reading ease
     // ×10³ via floored integer divisions only. The oracle recomputes
     // every count and quotient from the raw text.
-    (s, d) => CorpusOps.readability(docs(s, d), "doc_id", "text")
+    (s, d) => CorpusOps.readability(fixture(s, d, "documents"), "doc_id", "text")
       .orderBy(col("doc_id")),
     Some(s"""WITH b AS (
       |  SELECT doc_id,
@@ -1887,7 +1873,7 @@ object CorpusQueries extends QueryGroup {
     // k-anonymity audit over (lang, source, 100-char size bucket):
     // combination counts + at-risk flag (k=5). Pure hash aggregate; the
     // oracle is the literal SQL.
-    (s, d) => CorpusOps.kAnonymityAudit(docs(s, d),
+    (s, d) => CorpusOps.kAnonymityAudit(fixture(s, d, "documents"),
         Seq(col("lang"), col("source")), expr("n_chars div 100"), k = 5)
       .orderBy(col("lang"), col("source"), col("bucket")),
     Some("""SELECT lang, source, n_chars // 100 AS bucket,
@@ -1900,7 +1886,7 @@ object CorpusQueries extends QueryGroup {
     // (rank by count desc, word tie-break); ln quotient rounded 4 dp
     // (the p67 heaps_beta convention). The oracle re-derives the rank
     // with its own window.
-    (s, d) => CorpusOps.zipfFit(docs(s, d), col("source"), col("text"),
+    (s, d) => CorpusOps.zipfFit(fixture(s, d, "documents"), col("source"), col("text"),
         refRank = 16)
       .select(col("stratum").as("source"), col("n_types"), col("c1"),
         col("c_ref"), col("zipf_s"))
@@ -1927,7 +1913,7 @@ object CorpusQueries extends QueryGroup {
     // replica means as exact ×10⁶ integers, CI = order statistics of
     // the replica means. The oracle redraws every weight from the SAME
     // scaled-integer CDF thresholds and replays the ranks.
-    (s, d) => CorpusOps.bootstrapCi(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.bootstrapCi(fixture(s, d, "documents"), "doc_id", "text",
       replicas = 64),
     Some {
       val ths = CorpusOps.poissonThresholds32
@@ -1970,7 +1956,7 @@ object CorpusQueries extends QueryGroup {
     // spearmanAuto: the 2M-row/stratum bound takes the exact path at
     // every gate SF; an oversize stratum would hash-sample first (the
     // promoted corpus-scale branch, spec-pinned for path parity)
-    (s, d) => CorpusOps.spearmanAuto(docs(s, d), col("source"),
+    (s, d) => CorpusOps.spearmanAuto(fixture(s, d, "documents"), col("source"),
         col("n_chars"),
         graft.pipeline.TextOps.tokenCount(coalesce(col("text"), lit(""))),
         col("doc_id"))
@@ -2016,7 +2002,7 @@ object CorpusQueries extends QueryGroup {
     // rankSumAuditAuto: under the 2e9-row bound the exact window path
     // runs at every gate SF; past it the histogram-rank branch (the
     // promoted corpus-scale escape, spec-pinned) takes over
-    (s, d) => CorpusOps.rankSumAuditAuto(docs(s, d), col("source"),
+    (s, d) => CorpusOps.rankSumAuditAuto(fixture(s, d, "documents"), col("source"),
         col("n_chars"), col("doc_id"))
       .select(col("stratum").as("source"), col("n"), col("rank_sum"),
         col("u_stat"), col("u_max"), col("u_ppm"))
@@ -2071,7 +2057,7 @@ object CorpusQueries extends QueryGroup {
       val hits = size(filter(ws,
         w => w.isin(graft.pipeline.TextOps.stopwordsEn.map(lit): _*)))
       CorpusOps.aucAudit(
-        docs(s, d)
+        fixture(s, d, "documents")
           .withColumn("hits_c", hits)
           .withColumn("ntok_c", size(ws))
           .withColumn("score", expr(
@@ -2116,7 +2102,7 @@ object CorpusQueries extends QueryGroup {
     // cross-multiplication, plus the value where the max gap sits
     // (ties → smallest value). Oracle rebuilds the grid and both
     // cumulative ECDFs.
-    (s, d) => CorpusOps.ksAudit(docs(s, d), col("source"), col("n_chars"))
+    (s, d) => CorpusOps.ksAudit(fixture(s, d, "documents"), col("source"), col("n_chars"))
       .select(col("stratum").as("source"), col("n"), col("d_ppm"),
         col("d_at_value"))
       .orderBy(col("source")),
@@ -2155,7 +2141,7 @@ object CorpusQueries extends QueryGroup {
     // order-statistic histogram (oracle: full sort, the opposite
     // algorithm).
     (s, d) => {
-      val doc = docs(s, d)
+      val doc = fixture(s, d, "documents")
       val base = doc.agg(
         count(lit(1)).as("n_docs"),
         countDistinct(col("source")).as("n_sources"),
@@ -2199,7 +2185,7 @@ object CorpusQueries extends QueryGroup {
     // by range lookup. The oracle rebuilds the ranges with its own
     // window and replays every probe, so both the table AND the lookup
     // mechanics are checked.
-    (s, d) => CorpusOps.samplingTable(docs(s, d), "text", cap = 64L,
+    (s, d) => CorpusOps.samplingTable(fixture(s, d, "documents"), "text", cap = 64L,
       nProbes = 16),
     Some(s"""WITH u AS (
       |  SELECT unnest(list_filter($WORDS, x -> length(x) > 0)) AS w
@@ -2231,7 +2217,7 @@ object CorpusQueries extends QueryGroup {
     // text coalesced so a NULL-text doc counts 1 pseudo-token like the
     // oracle's $WORDS (a null would silently DROP the doc from the
     // quantile domain — the p23/p41 latent-divergence pattern)
-    (s, d) => CorpusOps.madOutliers(docs(s, d), "source",
+    (s, d) => CorpusOps.madOutliers(fixture(s, d, "documents"), "source",
       graft.pipeline.TextOps.tokenCount(coalesce(col("text"), lit("")))
         .cast("long"), k = 3L),
     Some(s"""WITH b AS (
@@ -2266,7 +2252,7 @@ object CorpusQueries extends QueryGroup {
     // never the vocabulary), pairs kept at support ≥ N/10; confidence
     // both directions and lift in exact integer PPM; top-30 by
     // (lift, pair). Oracle replays the full derivation.
-    (s, d) => CorpusOps.associationRules(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.associationRules(fixture(s, d, "documents"), "doc_id", "text",
       supDivisor = 5L, pairDivisor = 10L, k = 30)
       .orderBy(col("lift_ppm").desc, col("word_a"), col("word_b")),
     Some(s"""WITH dw AS (
@@ -2300,7 +2286,7 @@ object CorpusQueries extends QueryGroup {
     // double division; PMI rounds 4 dp (the zipfFit ln convention).
     // The oracle rebuilds both count relations and replays the
     // identical quotient.
-    (s, d) => CorpusOps.pmiCollocations(docs(s, d), "text",
+    (s, d) => CorpusOps.pmiCollocations(fixture(s, d, "documents"), "text",
       minCount = 5L, k = 20),
     Some(s"""WITH w AS (
       |  SELECT list_filter($WORDS, x -> length(x) > 0) AS ws
@@ -2332,7 +2318,7 @@ object CorpusQueries extends QueryGroup {
     // PPM. The oracle re-derives the rank with its own window.
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val counts = docs(s, d)
+      val counts = fixture(s, d, "documents")
         .select(explode(graft.pipeline.TextOps.words(
           coalesce(col("text"), lit("")))).as("w"))
         .filter(length(col("w")) > 0)
@@ -2385,7 +2371,7 @@ object CorpusQueries extends QueryGroup {
     // those params must force a rebuild, not silently reuse this one
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:crossdoc-spans:$d:k8:fp64") {
-      CorpusOps.crossDocSpanRel(docs(s, d), "doc_id", "text",
+      CorpusOps.crossDocSpanRel(fixture(s, d, "documents"), "doc_id", "text",
         k = 8, fpCap = 64, persist = false)
     }
 
@@ -2397,7 +2383,7 @@ object CorpusQueries extends QueryGroup {
     // (the boilerplate guard — declared semantics, replayed by the
     // oracle). Bills per pair: span count, longest span, per-span token
     // sum, and the DISTINCT covered positions in doc_a.
-    (s, d) => CorpusOps.crossDocSpans(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.crossDocSpans(fixture(s, d, "documents"), "doc_id", "text",
         k = 8, fpCap = 64, preSpans = Some(crossDocSpanShared(s, d)))
       .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents),
@@ -2444,7 +2430,7 @@ object CorpusQueries extends QueryGroup {
     // copier pays) and rebuild the scrubbed text, billed per document
     // with the rebuilt digest. Fully-covered documents drop out (their
     // rebuild is empty). Shares p124's span relation.
-    (s, d) => CorpusOps.crossDocScrub(docs(s, d), "doc_id", "text",
+    (s, d) => CorpusOps.crossDocScrub(fixture(s, d, "documents"), "doc_id", "text",
         k = 8, fpCap = 64, preSpans = Some(crossDocSpanShared(s, d)))
       .orderBy(col("doc_id")),
     Some(s"""WITH w AS (SELECT doc_id, $WORDS AS ws FROM documents),

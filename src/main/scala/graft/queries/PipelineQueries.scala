@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.functions.{Exact, Murmur3x86}
 import graft.pipeline._
+import graft.sources.GraftIO.fixture
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,25 +21,20 @@ import org.apache.spark.sql.functions._
  */
 object PipelineQueries extends QueryGroup {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
-
-  /** DuckDB mirror of TextOps.normalized. */
+  /** DuckDB mirror of TextOps.normalized (CorpusQueries' oracles too). */
   // coalesced: NULL text normalizes like '' (the library-wide convention,
   // matching TextOps.fingerprint/wordNGrams), so no oracle can diverge on
   // a NULL-text row
-  private val NORM =
+  private[queries] val NORM =
     "trim(regexp_replace(lower(coalesce(text, '')), '[^a-z0-9]+', ' ', 'g'))"
   /** DuckDB mirror of TextOps.words (split of the collapsed normal form). */
-  private val WORDS = s"string_split($NORM, ' ')"
+  private[queries] val WORDS = s"string_split($NORM, ' ')"
 
   // ---------------------------------------------------------------- dedup
 
   private val p1 = QueryDef(
     (s, d) => {
-      val base = docs(s, d)
+      val base = fixture(s, d, "documents")
       base.groupBy(col("source"))
         .agg(count(lit(1)).as("doc_count"),
           countDistinct(md5(col("text").cast("binary"))).as("distinct_count"))
@@ -51,7 +47,7 @@ object PipelineQueries extends QueryGroup {
       |FROM documents GROUP BY source ORDER BY source""".stripMargin))
 
   private val p2 = QueryDef(
-    (s, d) => docs(s, d).groupBy(col("source"))
+    (s, d) => fixture(s, d, "documents").groupBy(col("source"))
       .agg(count(lit(1)).as("doc_count"),
         countDistinct(TextOps.fingerprint(col("text"))).as("distinct_count"))
       .withColumn("dup_count", col("doc_count") - col("distinct_count"))
@@ -96,7 +92,7 @@ object PipelineQueries extends QueryGroup {
 
   private val p3 = QueryDef(
     (s, d) => DedupOps.ngramJaccardPairs(
-      docs(s, d).filter(col("doc_id") < 1000), "doc_id", "text", 3, 0.5)
+      fixture(s, d, "documents").filter(col("doc_id") < 1000), "doc_id", "text", 3, 0.5)
       .orderBy(col("doc_a"), col("doc_b")),
     Some(jaccardOracle))
 
@@ -110,7 +106,7 @@ object PipelineQueries extends QueryGroup {
   private def corpusShingleShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:doc-shingles3:$d") {
-      DedupOps.docShingles(docs(s, d), "doc_id", "text", 3)
+      DedupOps.docShingles(fixture(s, d, "documents"), "doc_id", "text", 3)
     }
 
   /** P109 — exact Jaccard join over the FULL corpus (no doc_id cap) by
@@ -123,7 +119,7 @@ object PipelineQueries extends QueryGroup {
    * completeness theorem on real data. */
   private val p109 = QueryDef(
     (s, d) => DedupOps.jaccardPrefixJoin(
-      docs(s, d), "doc_id", "text", 3, tPpm = 500000L,
+      fixture(s, d, "documents"), "doc_id", "text", 3, tPpm = 500000L,
       preShingles = Some(corpusShingleShared(s, d)))
       .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""WITH ${jaccardCtes("")},
@@ -150,7 +146,7 @@ object PipelineQueries extends QueryGroup {
    * pigeonhole completeness argument on real data. */
   private val p134 = QueryDef(
     (s, d) => DedupOps.containmentPrefixJoin(
-      docs(s, d), "doc_id", "text", 3, tPpm = 700000L,
+      fixture(s, d, "documents"), "doc_id", "text", 3, tPpm = 700000L,
       preShingles = Some(corpusShingleShared(s, d)))
       .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""WITH ${jaccardCtes("")},
@@ -174,7 +170,7 @@ object PipelineQueries extends QueryGroup {
     // join is the verification-scale form — see
     // DedupOps.containmentPairs for the containment-LSH escape).
     (s, d) => DedupOps.containmentPairs(
-      docs(s, d).filter(col("doc_id") < 1000), "doc_id", "text", 3, 0.7)
+      fixture(s, d, "documents").filter(col("doc_id") < 1000), "doc_id", "text", 3, 0.7)
       .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""WITH ${jaccardCtes("WHERE doc_id < 1000")},
       |cont AS (
@@ -195,7 +191,7 @@ object PipelineQueries extends QueryGroup {
     // id; strict containment keeps the superset. Oracle replays the rule
     // from the brute-forced pair relation.
     (s, d) => DedupOps.containmentScrub(
-      docs(s, d).filter(col("doc_id") < 1000), "doc_id", "text", 3, 0.7)
+      fixture(s, d, "documents").filter(col("doc_id") < 1000), "doc_id", "text", 3, 0.7)
       .orderBy(col("doc_id")),
     Some(s"""WITH ${jaccardCtes("WHERE doc_id < 1000")},
       |cont AS (
@@ -224,7 +220,7 @@ object PipelineQueries extends QueryGroup {
     // threshold boundary — and every candidate is exact-confirmed, so
     // false positives cost only confirm work, never wrong output.
     (s, d) => DedupOps.minhashLshVerifiedPairs(
-      docs(s, d).filter(col("doc_id") < 1000), "doc_id", "text",
+      fixture(s, d, "documents").filter(col("doc_id") < 1000), "doc_id", "text",
       n = 3, k = 64, bands = 32, threshold = 0.5)
       .orderBy(col("doc_a"), col("doc_b")),
     Some(jaccardOracle))
@@ -239,7 +235,7 @@ object PipelineQueries extends QueryGroup {
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:lsh-pairs:$d") {
       DedupOps.minhashLshVerifiedPairs(
-        docs(s, d), "doc_id", "text", n = 3, k = 64, bands = 32, threshold = 0.5)
+        fixture(s, d, "documents"), "doc_id", "text", n = 3, k = 64, bands = 32, threshold = 0.5)
     }
 
   /** Populate the run-scoped shared derivations of this group (the LSH
@@ -258,7 +254,7 @@ object PipelineQueries extends QueryGroup {
   private def mutualEdgesShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:mutual-edges:$d") {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("cembedding"))
@@ -289,7 +285,7 @@ object PipelineQueries extends QueryGroup {
     // parity also re-proves the banding's recall-1 property (2-row
     // bands at the 0.5 threshold) on the incremental path.
     (s, d) => DedupOps.minhashAppendVerdicts(
-      docs(s, d), "doc_id", "text", batch = col("doc_id") % 10 === 5)
+      fixture(s, d, "documents"), "doc_id", "text", batch = col("doc_id") % 10 === 5)
       .orderBy(col("doc_id")),
     Some(s"""WITH ${jaccardCtes("")},
       |nn AS (SELECT doc_id FROM sh WHERE doc_id % 10 = 5),
@@ -349,7 +345,7 @@ object PipelineQueries extends QueryGroup {
       import s.implicits._
       val suffixes = Seq(("com", 1), ("org", 1), ("co.uk", 2),
         ("jp", 1), ("ac.jp", 2)).toDF("suffix", "n_labels")
-      val base = docs(s, d).select(col("doc_id"), expr(hostSql).as("host"))
+      val base = fixture(s, d, "documents").select(col("doc_id"), expr(hostSql).as("host"))
       // tracked: the registered-domain derivation (scan + suffix
       // theta-join + max_by + join-back) fans out to BOTH the cap
       // branch and the final verdict join — uncached it executes twice
@@ -437,7 +433,7 @@ object PipelineQueries extends QueryGroup {
             .map { case (a, p) => (n, a, p, W.likePattern(p)) }
         }
       val rules = ruleRows.toDF("site", "allow", "rule_path", "like_pat")
-      val base = docs(s, d).select(col("doc_id"),
+      val base = fixture(s, d, "documents").select(col("doc_id"),
         (col("doc_id") % 7).as("site"),
         concat(lit("www.site"), (col("doc_id") % 7).cast("string"),
           lit(".com")).as("host"),
@@ -519,7 +515,7 @@ object PipelineQueries extends QueryGroup {
   private val p117 = QueryDef(
     (s, d) => {
       val labels = DedupOps.dupLabels(verifiedPairsFull(s, d))
-      val toks = docs(s, d).select(col("doc_id"),
+      val toks = fixture(s, d, "documents").select(col("doc_id"),
         graft.pipeline.TextOps.tokenCount(coalesce(col("text"), lit("")))
           .cast("long").as("n_tok"))
       labels.join(toks, col("node") === col("doc_id"))
@@ -586,7 +582,7 @@ object PipelineQueries extends QueryGroup {
     // 2³²-scale cuts (80/10/10); the oracle re-derives the clusters via
     // the recursive closure over the exact-Jaccard pairs and replays the
     // md5 arithmetic — every doc's assignment matches row-for-row.
-    (s, d) => DedupOps.leakageFreeSplit(docs(s, d), "doc_id",
+    (s, d) => DedupOps.leakageFreeSplit(fixture(s, d, "documents"), "doc_id",
         verifiedPairsFull(s, d), trainPct = 80, valPct = 10)
       .orderBy(col("doc_id")),
     Some(s"""WITH RECURSIVE ${jaccardCtes("")},
@@ -630,7 +626,7 @@ object PipelineQueries extends QueryGroup {
 
   private val p5 = QueryDef(
     (s, d) => DedupOps.simhashBuckets(
-      docs(s, d).filter(length(TextOps.normalized(col("text"))) > 0),
+      fixture(s, d, "documents").filter(length(TextOps.normalized(col("text"))) > 0),
       "doc_id", "text", bits = 16)
       .select(col("simhash"), col("bucket_size"), col("representative"))
       .orderBy(col("simhash")),
@@ -663,7 +659,7 @@ object PipelineQueries extends QueryGroup {
     // pairs at sf0.1 unbounded — pair enumeration is inherently
     // |family|² and the operator itself stays unbounded).
     (s, d) => DedupOps.hammingNearDupPairs(
-      docs(s, d).filter(col("doc_id") < 1000 &&
+      fixture(s, d, "documents").filter(col("doc_id") < 1000 &&
         length(TextOps.normalized(col("text"))) > 0),
       "doc_id", "text", bits = 28, maxDist = 3, blocks = 4)
       .orderBy(col("doc_a"), col("doc_b")),
@@ -744,7 +740,7 @@ object PipelineQueries extends QueryGroup {
    * evaluation strategy, so parity pins the greedy semantics. */
   private val p111 = QueryDef(
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       Similarity.mmrSelect(e.filter(col("vec_id") < 5), e, poolN = 8, k = 3)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -800,7 +796,7 @@ object PipelineQueries extends QueryGroup {
    * + a label-key join for the row totals. */
   private val p113 = QueryDef(
     (s, d) => {
-      val pred = docs(s, d)
+      val pred = fixture(s, d, "documents")
         .select(col("lang").as("label_lang"),
           graft.pipeline.TextOps.languageId(col("text")).as("pred_lang"))
       val cells = pred.groupBy(col("label_lang"), col("pred_lang"))
@@ -841,7 +837,7 @@ object PipelineQueries extends QueryGroup {
     // hoisted norm², MinKPairs k-bounded shuffle); ranking (sim_e3 DESC,
     // id) is exact-integer so ties cannot drift between engines.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       Similarity.bruteForceTopK(e.filter(col("vec_id") < 10), e, k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -864,7 +860,7 @@ object PipelineQueries extends QueryGroup {
     // Threshold join on the e3 INTEGER kernel — the threshold test is a
     // pure integer predicate (NULL zero-norm pairs never qualify).
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       Similarity.thresholdJoin(e.filter(col("vec_id") < 10), e, 0.3)
         .orderBy(col("query_id"), col("neighbor_id"))
     },
@@ -889,7 +885,7 @@ object PipelineQueries extends QueryGroup {
     // Bucketed ANN: float-sign axis bucket (unchanged — a code-sign
     // bucket would move the ≥ −0.0005 band), e3 INTEGER pair kernel.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       Similarity.bucketedAnn(e.filter(col("vec_id") < 50), e, 0.2, bits = 8)
         .orderBy(col("query_id"), col("neighbor_id"))
     },
@@ -912,7 +908,7 @@ object PipelineQueries extends QueryGroup {
     // IVF ANN with deterministic centroids (every 50th vector) — the
     // coarse-quantizer scale path: a query probes one inverted list.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
       Similarity.ivfAnn(e.filter(col("vec_id") < 20), e, centroids, 0.2, nprobe = 3)
@@ -938,7 +934,7 @@ object PipelineQueries extends QueryGroup {
     // re-derives the integer assignment and ranks with an independent
     // window formulation.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
       Similarity.knnGraph(e, centroids, k = 3)
@@ -990,7 +986,7 @@ object PipelineQueries extends QueryGroup {
     // components via a recursive transitive closure — a completely
     // different components algorithm from the engine's union-find /
     // min-label propagation.
-    (s, d) => Similarity.componentsFromEdges(embs(s, d),
+    (s, d) => Similarity.componentsFromEdges(fixture(s, d, "embeddings"),
         mutualEdgesShared(s, d))
       .orderBy(col("vec_id")),
     Some(s"""WITH RECURSIVE $mutualEdgeCte,
@@ -1013,7 +1009,7 @@ object PipelineQueries extends QueryGroup {
     // agreement < 0.5. The oracle replays the graph, both vote levels,
     // and the flag arithmetic independently.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
       Similarity.knnLabelPurity(e, centroids, k = 5, minFrac = 0.5)
@@ -1059,7 +1055,7 @@ object PipelineQueries extends QueryGroup {
     // DIFFERENT label — the label gate applies before the rank window.
     // The oracle rebuilds assignment, gate, and ranks independently.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
       Similarity.hardNegatives(e, centroids, k = 2)
@@ -1097,7 +1093,7 @@ object PipelineQueries extends QueryGroup {
     // bucket + the e3 integer-cosine pair kernel (quantize once,
     // hoisted norm², integer dot per pair — simE3Sql).
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       // the production "derive the index knob from corpus stats" step —
       // memoized run-scoped so repeated executions don't each pay the
       // eager count action (the stat is a pure function of the dataset).
@@ -1138,7 +1134,7 @@ object PipelineQueries extends QueryGroup {
     // cluster self-join — candidate generation is cluster-local on both
     // sides, never all-pairs.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
       Similarity.semanticDedup(e, centroids, threshold = 0.3)
@@ -1167,7 +1163,7 @@ object PipelineQueries extends QueryGroup {
     // and c_new/c_old are each ONE final IEEE division — no float
     // aggregate for either engine to re-order.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
       Similarity.kmeansStep(e, centroids)
@@ -1197,7 +1193,7 @@ object PipelineQueries extends QueryGroup {
     // quantize to e4 BIGINTs via floor(v·1e4 + 0.5) (pure IEEE, engine-
     // portable), the sum is integer (order-independent), and `proj` is
     // ONE final IEEE division — no round of a multi-partition float sum.
-    (s, d) => Similarity.randomProjection(embs(s, d), dimIn = 64, dimOut = 16)
+    (s, d) => Similarity.randomProjection(fixture(s, d, "embeddings"), dimIn = 64, dimOut = 16)
       .orderBy(col("vec_id"), col("j")),
     Some("""WITH sg AS (
       |  SELECT i.i AS pos, j.j AS j,
@@ -1243,7 +1239,7 @@ object PipelineQueries extends QueryGroup {
     // vectors (the fixed-order l2Sq kernel the PQ oracles proved), for
     // the 10 query vectors. The oracle replays BOTH rankings and the
     // overlap; ties break on the neighbor id in each.
-    (s, d) => Similarity.sq8RecallAudit(embs(s, d), queryMax = 10L, k = 5)
+    (s, d) => Similarity.sq8RecallAudit(fixture(s, d, "embeddings"), queryMax = 10L, k = 5)
       .orderBy(col("query_id")),
     Some(s"""WITH $sq8SqlCtes,
       |q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
@@ -1289,7 +1285,7 @@ object PipelineQueries extends QueryGroup {
     // Hnsw.duckOracle so the CTE chain always matches the superstep
     // counts.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       graft.pipeline.Hnsw.recallAudit(e, hnswCentroids(e), queryMax = 20L,
           m = 16, ef = 128, k = 5, maxLevel = hnswMaxLevel, beamSteps = 4,
           cellAdj = 8, hopsPerLevel = 1,
@@ -1318,7 +1314,7 @@ object PipelineQueries extends QueryGroup {
   private def hnswAssignedShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:hnsw-assigned:$d") {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       graft.pipeline.Hnsw.assignedNodes(e, hnswCentroids(e), hnswMaxLevel)
     }
 
@@ -1335,7 +1331,7 @@ object PipelineQueries extends QueryGroup {
     // oracle (Hnsw.duckOracleAppend) rebuilds both stages and unrolls
     // the walk, so the frozen/appended split itself is verified.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       graft.pipeline.Hnsw.appendAudit(e, hnswCentroids(e),
           batch = col("vec_id") % 10 === 5, queryMax = 20L,
           m = 16, ef = 128, k = 5, maxLevel = hnswMaxLevel, beamSteps = 4,
@@ -1364,7 +1360,7 @@ object PipelineQueries extends QueryGroup {
     // matches only if the framing, header layout, and walk are exact.
     (s, d) => {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), expr("doc_id div 25").as("bucket"),
           encode(regexp_replace(coalesce(col("text"), lit("")),
             "[^ -~]", "?"), "UTF-8").as("px"))
@@ -1446,7 +1442,7 @@ object PipelineQueries extends QueryGroup {
     // structure at any corpus.
     (s, d) => {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), expr("doc_id div 25").as("bucket"),
           encode(regexp_replace(coalesce(col("text"), lit("")),
             "[^ -~]", "?"), "UTF-8").as("px"))
@@ -1624,7 +1620,7 @@ object PipelineQueries extends QueryGroup {
     // every normalization with its own regex/string functions, so a
     // single mishandled port/slash/param ordering breaks the hash.
     (s, d) => UrlOps.hostCensus(
-        UrlOps.frontierBase(docs(s, d), expr(rawUrlSql)))
+        UrlOps.frontierBase(fixture(s, d, "documents"), expr(rawUrlSql)))
       .orderBy(col("host")),
     Some(s"""WITH raw AS (
       |  SELECT doc_id, length(coalesce(text, '')) AS chars,
@@ -1742,7 +1738,7 @@ object PipelineQueries extends QueryGroup {
     // δ² e12-quantized BEFORE the per-vector sum (the exact-integer
     // convention). The oracle replays calibration, coding, and error
     // arithmetic from scratch.
-    (s, d) => Similarity.sq8Quantize(embs(s, d)).orderBy(col("vec_id")),
+    (s, d) => Similarity.sq8Quantize(fixture(s, d, "embeddings")).orderBy(col("vec_id")),
     Some(s"""WITH $sq8SqlCtes,
       |r AS (SELECT vec_id, dim, code,
       |             CAST(floor((v - (mn + code * (mx - mn) / 255.0)) *
@@ -1765,7 +1761,7 @@ object PipelineQueries extends QueryGroup {
     // assignments with the independent window formulation and replays
     // the integer arithmetic.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("cembedding"))
@@ -1828,7 +1824,7 @@ object PipelineQueries extends QueryGroup {
   private def pqTrainShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:pq-train:$d") {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("cembedding"))
@@ -1943,7 +1939,7 @@ object PipelineQueries extends QueryGroup {
     // engines) quantizes to e6 via floor(d·10⁶ + 0.5) BEFORE the
     // per-vector sum — no rounded float aggregate.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       Similarity.pqQuantize(e, pqCodebooks(s, e), dsub = 16)
         .orderBy(col("vec_id"))
     },
@@ -1959,7 +1955,7 @@ object PipelineQueries extends QueryGroup {
     // hash-derived sign. The oracle reproduces the hash via the pinned
     // vocab table (fixture docs draw from exactly these 31 words — the
     // same totality p5 relies on).
-    (s, d) => TextOps.hashEmbedding(docs(s, d), "doc_id", "text", dim = 64)
+    (s, d) => TextOps.hashEmbedding(fixture(s, d, "documents"), "doc_id", "text", dim = 64)
       .orderBy(col("doc_id")),
     Some(s"""WITH vocab(word, h, hs) AS (SELECT * FROM (VALUES $vocabValues2)),
       |t AS (SELECT doc_id, unnest(list_filter($WORDS, w -> length(w) > 0))
@@ -1981,7 +1977,7 @@ object PipelineQueries extends QueryGroup {
     // exact-integer convention — ranking can't ride a float-add order).
     // Oracle recomputes codes + LUTs + the integer lookup sum.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       Similarity.pqAdcTopK(e.filter(col("vec_id") < 10), e,
         pqCodebooks(s, e), dsub = 16, k = 5)
         .orderBy(col("query_id"), col("rank"))
@@ -2023,7 +2019,7 @@ object PipelineQueries extends QueryGroup {
     // assignment, residuals, codes, probes, LUTs, and the integer
     // lookup sum from scratch.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("cembedding"))
@@ -2100,7 +2096,7 @@ object PipelineQueries extends QueryGroup {
    * exact ranking. */
   private val p135 = QueryDef(
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("cembedding"))
@@ -2171,7 +2167,7 @@ object PipelineQueries extends QueryGroup {
    * shared integer-affinity assignment replay. */
   private val p136 = QueryDef(
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("cembedding"))
@@ -2259,7 +2255,7 @@ object PipelineQueries extends QueryGroup {
       // either way) while storing the relation TWICE (the checkpoint RDD
       // blocks plus memoRun's columnar copy, and releaseRun frees only
       // the latter)
-      Similarity.plantedEmbeddings(embs(s, d))
+      Similarity.plantedEmbeddings(fixture(s, d, "embeddings"))
     }
 
   private def plantedCentroids(pl: DataFrame): DataFrame =
@@ -2400,7 +2396,7 @@ object PipelineQueries extends QueryGroup {
    * exactly why the PAIR output of the near-dup operator would be
    * vacuous here and the bucket relation is the audited surface. */
   private val p138 = QueryDef(
-    (s, d) => Similarity.withQ3(embs(s, d))
+    (s, d) => Similarity.withQ3(fixture(s, d, "embeddings"))
       .select(col("vec_id"),
         Similarity.signBucketHyperplanes(col("codes"), 17, 64).as("bucket"))
       .orderBy(col("vec_id")),
@@ -2427,7 +2423,7 @@ object PipelineQueries extends QueryGroup {
     TextOps.stopwordsEn.map(w => s"'$w'").mkString("[", ", ", "]")
 
   private val p9 = QueryDef(
-    (s, d) => TextOps.qualityFeatures(docs(s, d), col("text"))
+    (s, d) => TextOps.qualityFeatures(fixture(s, d, "documents"), col("text"))
       // the oracle emits only tokenizable docs; zero-word rows carry
       // NULL ratios by the qualityFeatures contract and are out of scope
       .filter(col("n_words") > 0)
@@ -2467,7 +2463,7 @@ object PipelineQueries extends QueryGroup {
   }
 
   private val p10 = QueryDef(
-    (s, d) => docs(s, d)
+    (s, d) => fixture(s, d, "documents")
       .withColumn("lang_pred", TextOps.languageId(col("text")))
       .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))
       .orderBy(col("lang_pred")),
@@ -2477,7 +2473,7 @@ object PipelineQueries extends QueryGroup {
       |GROUP BY lang_pred ORDER BY lang_pred""".stripMargin))
 
   private val p11 = QueryDef(
-    (s, d) => docs(s, d)
+    (s, d) => fixture(s, d, "documents")
       .withColumn("tc", TextOps.tokenCount(col("text")))
       .withColumn("te", TextOps.tokenEstimate(col("text")))
       .groupBy(col("source"))
@@ -2518,7 +2514,7 @@ object PipelineQueries extends QueryGroup {
     // is the final fingerprint→bucket hash-agg.
     (s, d) => {
       val minLen = TextOps.winnowK + TextOps.winnowW - 1
-      docs(s, d)
+      fixture(s, d, "documents")
         .withColumn("norm", TextOps.normalized(col("text")))
         .filter(length(col("norm")) >= minLen)
         .withColumn("fp", explode(TextOps.winnowFingerprints(col("norm"))))
@@ -2559,7 +2555,7 @@ object PipelineQueries extends QueryGroup {
     // cap and both joins.
     (s, d) => {
       val minLen = TextOps.winnowK + TextOps.winnowW - 1
-      val all = docs(s, d)
+      val all = fixture(s, d, "documents")
         .withColumn("norm", TextOps.normalized(col("text")))
         .filter(length(col("norm")) >= minLen)
         .select(col("doc_id"),
@@ -2615,7 +2611,7 @@ object PipelineQueries extends QueryGroup {
     "['image', 'audio', 'video'][CAST(doc_id % 3 + 1 AS INT)]"
 
   private val p12 = QueryDef(
-    (s, d) => Multimodal.decodeDocuments(docs(s, d)).orderBy(col("doc_id")),
+    (s, d) => Multimodal.decodeDocuments(fixture(s, d, "documents")).orderBy(col("doc_id")),
     Some(s"""WITH a AS (
       |  SELECT doc_id, $mediaTypeSql AS media_type,
       |         octet_length(encode(coalesce(text, ''))) AS byte_len, coalesce(text, '') AS text
@@ -2628,7 +2624,8 @@ object PipelineQueries extends QueryGroup {
       |FROM a ORDER BY doc_id""".stripMargin))
 
   private val p13 = QueryDef(
-    (s, d) => Multimodal.sampleFrames(Multimodal.asAssets(docs(s, d)), stride = 8, frames = 4)
+    (s, d) => Multimodal.sampleFrames(
+      Multimodal.asAssets(fixture(s, d, "documents")), stride = 8, frames = 4)
       .orderBy(col("doc_id"), col("frame_idx")),
     Some(s"""SELECT doc_id, $mediaTypeSql AS media_type,
       |       CAST(i AS INT) AS frame_idx,
@@ -2646,7 +2643,7 @@ object PipelineQueries extends QueryGroup {
     // stubbed in p12/p13 — no media libs in this environment.)
     (s, d) => {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("pcm"))
         .as[(Long, Array[Byte])]
       in.mapPartitions { it =>
@@ -2685,7 +2682,7 @@ object PipelineQueries extends QueryGroup {
     // framing and the frame walk are exact.
     (s, d) => {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"),
           encode(regexp_replace(coalesce(col("text"), lit("")),
             "[^ -~]", "?"), "UTF-8").as("px"))
@@ -2759,7 +2756,7 @@ object PipelineQueries extends QueryGroup {
     // engine-side payload-hash check (oracle knows it must hold).
     (s, d) => {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("px"))
         .as[(Long, Array[Byte])]
       in.mapPartitions { it =>
@@ -2794,8 +2791,8 @@ object PipelineQueries extends QueryGroup {
       |FROM h ORDER BY doc_id""".stripMargin))
 
   /** The decoded-BMP 8×8 gray grid as SQL, ending in
-   * `gray(doc_id, i, j, g3)` — the shared downsample of p42 (aHash) and
-   * p84 (pHash): container geometry (stride, derived height),
+   * `gray(doc_id, i, j, g3)` — the shared downsample of p42 (aHash), p84
+   * (pHash) and [[dhashCtes]]: container geometry (stride, derived height),
    * nearest-neighbor point sampling, 3-channel sum. */
   private val bmpGray8Cte: String =
     """g AS (
@@ -2839,7 +2836,7 @@ object PipelineQueries extends QueryGroup {
     // byte-level feature extraction.
     (s, d) => {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("px"))
         .as[(Long, Array[Byte])]
       in.mapPartitions { it =>
@@ -2900,7 +2897,7 @@ object PipelineQueries extends QueryGroup {
     (s, d) => {
       import s.implicits._
       val frame = 100
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("pcm"))
         .as[(Long, Array[Byte])]
       in.mapPartitions { it =>
@@ -2979,7 +2976,7 @@ object PipelineQueries extends QueryGroup {
     (s, d) => {
       import s.implicits._
       val thr = 16; val minLen = 3
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("pcm"))
         .as[(Long, Array[Byte])]
       in.mapPartitions { it =>
@@ -3059,7 +3056,7 @@ object PipelineQueries extends QueryGroup {
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:dhash-pairs:$d") {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("px"))
         .as[(Long, Array[Byte])]
       val hashed = in.mapPartitions { it =>
@@ -3104,36 +3101,11 @@ object PipelineQueries extends QueryGroup {
       |SELECT doc_a, doc_b, hamming FROM dp
       |ORDER BY doc_a, doc_b""".stripMargin))
 
-  /** DuckDB rebuild of the dHash relation + brute-forced pairs (shared by
-   * the p58 report and the p99 cluster decision). */
+  /** DuckDB rebuild of the dHash relation over [[bmpGray8Cte]]'s grid +
+   * brute-forced pairs (shared by the p58 report and the p99 cluster
+   * decision). */
   private def dhashCtes: String =
-    """g AS (
-      |  SELECT doc_id, CAST(16 + doc_id % 32 AS INT) AS w,
-      |         octet_length(encode(coalesce(text, ''))) AS len, coalesce(text, '') AS text
-      |  FROM documents),
-      |h AS (SELECT *, CAST(((w * 3 + 3) // 4) * 4 AS INT) AS stride,
-      |             CAST((octet_length(encode(coalesce(text, ''))) + ((w * 3 + 3) // 4) * 4 - 1)
-      |               // (((w * 3 + 3) // 4) * 4) AS INT) AS hgt
-      |      FROM g),
-      |cell AS (
-      |  SELECT doc_id, w, hgt, stride, len, text, i, j,
-      |         ((2 * i + 1) * hgt) // 16 AS y,
-      |         ((2 * j + 1) * w) // 16 AS x
-      |  FROM h
-      |  CROSS JOIN (SELECT unnest(range(0, 8)) AS i)
-      |  CROSS JOIN (SELECT unnest(range(0, 8)) AS j)),
-      |gray AS (
-      |  SELECT doc_id, i, j,
-      |         (CASE WHEN y * stride + x * 3 < len
-      |               THEN ord(substr(text, CAST(y * stride + x * 3 + 1 AS INT), 1))
-      |               ELSE 0 END +
-      |          CASE WHEN y * stride + x * 3 + 1 < len
-      |               THEN ord(substr(text, CAST(y * stride + x * 3 + 2 AS INT), 1))
-      |               ELSE 0 END +
-      |          CASE WHEN y * stride + x * 3 + 2 < len
-      |               THEN ord(substr(text, CAST(y * stride + x * 3 + 3 AS INT), 1))
-      |               ELSE 0 END) AS g3
-      |  FROM cell),
+    bmpGray8Cte + """,
       |bits AS (
       |  SELECT a.doc_id, a.i, a.j,
       |         CASE WHEN a.g3 < b.g3 THEN 1 ELSE 0 END AS bit
@@ -3185,7 +3157,7 @@ object PipelineQueries extends QueryGroup {
     // shuffle.
     (s, d) => {
       import s.implicits._
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("pcm"))
         .as[(Long, Array[Byte])]
       in.mapPartitions { it =>
@@ -3241,7 +3213,7 @@ object PipelineQueries extends QueryGroup {
     // histogram ceil-rank selection), and replays the integer fence
     // arithmetic.
     (s, d) => Similarity.embeddingAudit(
-        embs(s, d), "vec_id", "embedding", "label", dim = 64)
+        fixture(s, d, "embeddings"), "vec_id", "embedding", "label", dim = 64)
       .orderBy(col("label")),
     Some(s"""WITH b AS (
       |  SELECT CAST(label AS VARCHAR) AS label, vec_id,
@@ -3288,7 +3260,7 @@ object PipelineQueries extends QueryGroup {
     // argmax in ONE struct-max aggregation; the oracle takes the
     // opposite route — a rank window over all (corpus, bench) pairs.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       Similarity.semanticContamination(
         e.filter(col("vec_id") >= 20), e.filter(col("vec_id") < 20), 0.35)
         .orderBy(col("vec_id"))
@@ -3337,7 +3309,7 @@ object PipelineQueries extends QueryGroup {
     (s, d) => {
       import s.implicits._
       val b = dctB
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"), encode(coalesce(col("text"), lit("")), "UTF-8").as("px"))
         .as[(Long, Array[Byte])]
       in.mapPartitions { it =>
@@ -3455,7 +3427,7 @@ object PipelineQueries extends QueryGroup {
     // oracle re-enumerates them in SQL from the same reciprocated edge
     // relation and replays the ppm arithmetic.
     (s, d) => graft.pipeline.GraphOps.triangleStats(
-        embs(s, d), "vec_id", mutualEdgesShared(s, d), "a", "b")
+        fixture(s, d, "embeddings"), "vec_id", mutualEdgesShared(s, d), "a", "b")
       .orderBy(col("vec_id")),
     Some(s"""WITH $mutualEdgeCte,
       |tri AS (
@@ -3490,7 +3462,7 @@ object PipelineQueries extends QueryGroup {
     // candidate relation, both neighborhood sums, and the margin
     // arithmetic independently.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("cembedding"))
@@ -3554,7 +3526,7 @@ object PipelineQueries extends QueryGroup {
     (s, d) => {
       import s.implicits._
       val basis = dftBasis
-      val in = docs(s, d)
+      val in = fixture(s, d, "documents")
         .select(col("doc_id"),
           encode(coalesce(col("text"), lit("")), "UTF-8").as("pcm"))
         .as[(Long, Array[Byte])]
@@ -3620,7 +3592,7 @@ object PipelineQueries extends QueryGroup {
   private def covShared(s: SparkSession, d: String): DataFrame =
     graft.CacheScope.memoRun(
       s"${s.sparkContext.applicationId}:cov-upper:$d") {
-      Similarity.covarianceUpper(embs(s, d))
+      Similarity.covarianceUpper(fixture(s, d, "embeddings"))
     }
 
   /** DuckDB replay of [[Similarity.covarianceUpper]]. */
@@ -3697,7 +3669,7 @@ object PipelineQueries extends QueryGroup {
     // rankings on the shared e3 integer kernel and replays the overlap
     // join.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
@@ -3743,7 +3715,7 @@ object PipelineQueries extends QueryGroup {
     // load factor vs uniform — all exact integer PPM. The oracle
     // re-derives the assignment with the independent window formulation.
     (s, d) => {
-      val e = embs(s, d)
+      val e = fixture(s, d, "embeddings")
       val centroids = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cembedding"))
       Similarity.ivfCellStats(e, centroids)

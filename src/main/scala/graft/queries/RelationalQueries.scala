@@ -3,7 +3,7 @@ package graft.queries
 import graft.functions.Exact
 import graft.model.EventLog
 import graft.operators.{AsofJoin, Funnel, RangeJoin, Retention, Sessionize}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.GraftIO.fixture
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,9 +26,6 @@ import org.apache.spark.sql.functions._
  */
 object RelationalQueries extends QueryGroup {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** TPC-H Q1-shaped pricing summary: single scan, partial aggregation.
    * Money sums and averages run the [[Exact]] convention — per-row e-k
    * integer codes (lossless: TPC-H money/quantity/discount are exactly
@@ -36,7 +33,7 @@ object RelationalQueries extends QueryGroup {
    * averages use the overflow-safe split rounding so intermediates stay
    * corpus-scale-safe. */
   private val q1 = QueryDef(
-    (s, d) => t(s, d, "lineitem")
+    (s, d) => fixture(s, d, "lineitem")
       .filter(col("l_shipdate") <= expr("TIMESTAMP '2001-09-01 00:00:00'"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -88,10 +85,10 @@ object RelationalQueries extends QueryGroup {
    * date-filtered orders side is ~1.1e10 rows). */
   private val q3 = QueryDef(
     (s, d) => {
-      val cust = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, d, "orders")
+      val cust = fixture(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
+      val ord = fixture(s, d, "orders")
         .filter(col("o_orderdate") < expr("TIMESTAMP '1998-06-01 00:00:00'"))
-      val li = t(s, d, "lineitem")
+      val li = fixture(s, d, "lineitem")
         .filter(col("l_shipdate") > expr("TIMESTAMP '1998-06-01 00:00:00'"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(cust, col("o_custkey") === col("c_custkey"))
@@ -113,8 +110,8 @@ object RelationalQueries extends QueryGroup {
   /** Semi/anti join surface: customers with vs without orders. */
   private val j1 = QueryDef(
     (s, d) => {
-      val cust = t(s, d, "customer")
-      val ord = t(s, d, "orders").select(col("o_custkey"))
+      val cust = fixture(s, d, "customer")
+      val ord = fixture(s, d, "orders").select(col("o_custkey"))
       val withOrders = cust.join(ord, col("c_custkey") === col("o_custkey"), "left_semi")
         .agg(count(lit(1)).as("with_orders"))
       val withoutOrders = cust.join(ord, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -132,7 +129,7 @@ object RelationalQueries extends QueryGroup {
   private val j2 = QueryDef(
     (s, d) => {
       val e = EventLog.topic(s, d)
-      val cust = t(s, d, "customer")
+      val cust = fixture(s, d, "customer")
       e.join(cust, col("key").cast("long") + 1 === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"), Exact.sumE(col("value"), 2).as("sum_v"))
@@ -145,7 +142,7 @@ object RelationalQueries extends QueryGroup {
 
   /** Top-k with deterministic tie-break. */
   private val j3 = QueryDef(
-    (s, d) => t(s, d, "orders")
+    (s, d) => fixture(s, d, "orders")
       .groupBy(col("o_custkey"))
       .agg(Exact.sumE(col("o_totalprice"), 2).as("total"), count(lit(1)).as("n_orders"))
       .orderBy(col("total").desc, col("o_custkey")).limit(10),
@@ -237,9 +234,9 @@ object RelationalQueries extends QueryGroup {
   private val j5 = QueryDef(
     (s, d) => {
       val win = 3L * 86400000L
-      val pts = t(s, d, "lineitem").filter(col("l_returnflag") === "R")
+      val pts = fixture(s, d, "lineitem").filter(col("l_returnflag") === "R")
         .select(unix_millis(col("l_shipdate")).as("ship_ms"), col("l_quantity"))
-      val iv = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
+      val iv = fixture(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), unix_millis(col("o_orderdate")).as("win_start"))
         .withColumn("win_end", col("win_start") + win)
       RangeJoin.pointInInterval(pts, iv, "ship_ms", "win_start", "win_end",
@@ -265,7 +262,7 @@ object RelationalQueries extends QueryGroup {
    * order can touch row identity; `gid` is the grouping_id bitmask
    * (first grouping column = most significant bit, both engines). */
   private val q4 = QueryDef(
-    (s, d) => t(s, d, "lineitem")
+    (s, d) => fixture(s, d, "lineitem")
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(Exact.sumE(col("l_quantity"), 2).as("sum_qty"),
         count(lit(1)).as("n"),
@@ -292,7 +289,7 @@ object RelationalQueries extends QueryGroup {
   private val q5 = QueryDef(
     (s, d) => {
       val statuses = Seq("F", "O", "P")
-      val piv = t(s, d, "orders")
+      val piv = fixture(s, d, "orders")
         .groupBy(col("o_orderpriority"))
         .pivot("o_orderstatus", statuses)
         .agg(count(lit(1)))
@@ -332,7 +329,7 @@ object RelationalQueries extends QueryGroup {
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       val wq = org.apache.spark.sql.expressions.Window
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      val orders = t(s, d, "orders")
+      val orders = fixture(s, d, "orders")
       val quartile = orders.select(col("o_orderkey"), col("o_totalprice"))
         .withColumn("spend_quartile", ntile(4).over(wq).cast("long"))
         .drop("o_totalprice")
@@ -387,7 +384,7 @@ object RelationalQueries extends QueryGroup {
         .orderBy(col("bkt"))
       val wf = org.apache.spark.sql.expressions.Window
         .partitionBy(col("k")).orderBy(col("cents"))
-      val orders = t(s, d, "orders")
+      val orders = fixture(s, d, "orders")
         .withColumn("cents", Exact.eRow(col("o_totalprice"), 2))
       // coarse histogram over hundred-dollar buckets: bounded domain →
       // the cumulative window is histogram-scale, never row-scale
@@ -470,10 +467,10 @@ object RelationalQueries extends QueryGroup {
    * fact per outer row. */
   private val q2 = QueryDef(
     (s, d) => {
-      val joined = t(s, d, "supplier")
-        .join(broadcast(t(s, d, "nation")),
+      val joined = fixture(s, d, "supplier")
+        .join(broadcast(fixture(s, d, "nation")),
           col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, d, "region")),
+        .join(broadcast(fixture(s, d, "region")),
           col("n_regionkey") === col("r_regionkey"))
       val regMax = joined.groupBy(col("r_regionkey").as("mr"))
         .agg(max(col("s_acctbal")).as("max_bal"))
@@ -504,7 +501,7 @@ object RelationalQueries extends QueryGroup {
    * set is tiny, so AQE broadcasts it at every tier). */
   private val q7 = QueryDef(
     (s, d) => {
-      val rev = t(s, d, "lineitem")
+      val rev = fixture(s, d, "lineitem")
         .filter(col("l_shipdate") >= expr("TIMESTAMP '1996-01-01 00:00:00'") &&
           col("l_shipdate") < expr("TIMESTAMP '1997-01-01 00:00:00'"))
         .groupBy(col("l_suppkey"))
@@ -514,7 +511,7 @@ object RelationalQueries extends QueryGroup {
       val top = rev.agg(max(col("rev_e4")).as("max_rev"))
       rev.crossJoin(broadcast(top))
         .filter(col("rev_e4") === col("max_rev"))
-        .join(t(s, d, "supplier"),
+        .join(fixture(s, d, "supplier"),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("rev_e4"),
           Exact.rRow(col("rev_e4") / 10000.0, 2).as("total_revenue"))
@@ -551,9 +548,9 @@ object RelationalQueries extends QueryGroup {
    * size-elected (BHJ at gate SF, SMJ at corpus scale). */
   private val q8 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem")
+      val li = fixture(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      val fOrders = t(s, d, "orders")
+      val fOrders = fixture(s, d, "orders")
         .filter(col("o_orderstatus") === "F").select(col("o_orderkey"))
       val perOrder = li.groupBy(col("l_orderkey").as("ok"))
         .agg(max(col("l_shipdate")).as("max_ship"),
@@ -563,7 +560,7 @@ object RelationalQueries extends QueryGroup {
         .filter(col("n_sup") > 1 && col("l_shipdate") === col("max_ship"))
         .groupBy(col("l_suppkey"))
         .agg(count(lit(1)).as("numwait"))
-        .join(t(s, d, "supplier"),
+        .join(fixture(s, d, "supplier"),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("numwait"))
         .orderBy(col("numwait").desc, col("s_suppkey")).limit(10)
@@ -596,7 +593,7 @@ object RelationalQueries extends QueryGroup {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_custkey")).orderBy(col("day"))
         .rangeBetween(-30, 0)
-      t(s, d, "orders")
+      fixture(s, d, "orders")
         .withColumn("day", day)
         .withColumn("cents", Exact.eRow(col("o_totalprice"), 2))
         .select(col("o_custkey"), col("o_orderkey"), col("day"),
@@ -629,13 +626,13 @@ object RelationalQueries extends QueryGroup {
    * co-partitioned on that key; the customer dim join is size-elected. */
   private val q10 = QueryDef(
     (s, d) => {
-      val perOrder = t(s, d, "lineitem")
+      val perOrder = fixture(s, d, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast("long")).as("total_qty"))
         .filter(col("total_qty") > 250L)
-      t(s, d, "orders")
+      fixture(s, d, "orders")
         .join(perOrder, col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, d, "customer"),
+        .join(fixture(s, d, "customer"),
           col("o_custkey") === col("c_custkey"))
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
           datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
@@ -669,12 +666,12 @@ object RelationalQueries extends QueryGroup {
    * distinct aggregation on the group keys (partial distinct map-side). */
   private val q11 = QueryDef(
     (s, d) => {
-      val part = t(s, d, "part")
+      val part = fixture(s, d, "part")
         .filter(col("p_brand") =!= "Brand#1" && col("p_size") <= 25)
         .select(col("p_partkey"), col("p_brand"), col("p_size"))
-      val excluded = t(s, d, "supplier")
+      val excluded = fixture(s, d, "supplier")
         .filter(col("s_acctbal") < 1000).select(col("s_suppkey"))
-      t(s, d, "lineitem").select(col("l_partkey"), col("l_suppkey"))
+      fixture(s, d, "lineitem").select(col("l_partkey"), col("l_suppkey"))
         .join(excluded,
           col("l_suppkey") === col("s_suppkey"), "left_anti")
         .join(part, col("l_partkey") === col("p_partkey"))
@@ -706,11 +703,11 @@ object RelationalQueries extends QueryGroup {
    * the customer key. */
   private val q12 = QueryDef(
     (s, d) => {
-      val pos = t(s, d, "customer").filter(col("c_acctbal") > 0)
+      val pos = fixture(s, d, "customer").filter(col("c_acctbal") > 0)
         .withColumn("cents", Exact.eRow(col("c_acctbal"), 2))
       val stats = pos.agg(count(lit(1)).as("n_pos"),
         sum(col("cents")).as("sum_cents"))
-      val urgent = t(s, d, "orders")
+      val urgent = fixture(s, d, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_custkey")).distinct()
       pos.crossJoin(broadcast(stats))
@@ -748,17 +745,17 @@ object RelationalQueries extends QueryGroup {
    * it genuinely needs. */
   private val q13 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem").select(col("l_orderkey"),
+      val li = fixture(s, d, "lineitem").select(col("l_orderkey"),
         col("l_suppkey"),
         year(col("l_shipdate")).as("ship_year"),
         (Exact.eRow(col("l_extendedprice"), 2) *
           (lit(100L) - Exact.eRow(col("l_discount"), 2)))
           .as("rev_e4"))
-      val sup = t(s, d, "supplier")
+      val sup = fixture(s, d, "supplier")
         .select(col("s_suppkey"), (col("s_nationkey") % 2).as("supp_bloc"))
-      val cust = t(s, d, "customer")
+      val cust = fixture(s, d, "customer")
         .select(col("c_custkey"), (col("c_nationkey") % 2).as("cust_bloc"))
-      val ord = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val ord = fixture(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
       li.join(sup, col("l_suppkey") === col("s_suppkey"))
         .join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(cust, col("o_custkey") === col("c_custkey"))
@@ -789,10 +786,10 @@ object RelationalQueries extends QueryGroup {
    * aggregation is histogram-scale. */
   private val q14 = QueryDef(
     (s, d) => {
-      val ord = t(s, d, "orders")
+      val ord = fixture(s, d, "orders")
         .filter(col("o_orderpriority") =!= "5-LOW")
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_ord"))
-      val perCust = t(s, d, "customer")
+      val perCust = fixture(s, d, "customer")
         .join(ord, col("c_custkey") === col("o_custkey"), "left")
         .select(coalesce(col("n_ord"), lit(0L)).as("c_count"))
       perCust.groupBy(col("c_count"))
@@ -822,7 +819,7 @@ object RelationalQueries extends QueryGroup {
    * part dim join is size-elected. */
   private val q15 = QueryDef(
     (s, d) => {
-      val ps = t(s, d, "lineitem")
+      val ps = fixture(s, d, "lineitem")
         .groupBy(col("l_partkey"), col("l_suppkey"))
         .agg(sum(col("l_quantity").cast("long")).as("supp_qty"))
       val tot = ps.groupBy(col("l_partkey"))
@@ -831,7 +828,7 @@ object RelationalQueries extends QueryGroup {
       ps.join(tot, Seq("l_partkey"))
         .filter(col("supp_qty") * 100 > col("part_qty") * 15 &&
           col("n_suppliers") > 1)
-        .join(t(s, d, "part"),
+        .join(fixture(s, d, "part"),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_partkey").as("partkey"), col("p_name"),
           col("l_suppkey").as("suppkey"), col("supp_qty"),
@@ -867,8 +864,8 @@ object RelationalQueries extends QueryGroup {
    * one 3-group aggregation with map-side partials. */
   private val q16 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem")
-      val part = t(s, d, "part")
+      val li = fixture(s, d, "lineitem")
+      val part = fixture(s, d, "part")
       li.join(part, col("l_partkey") === col("p_partkey"))
         .filter(
           (col("p_brand") === "Brand#2" && col("p_size").between(1, 10) &&
@@ -910,17 +907,17 @@ object RelationalQueries extends QueryGroup {
    * dimension key it doesn't need. */
   private val q17 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
+      val li = fixture(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
         (Exact.eRow(col("l_extendedprice"), 2) *
           (lit(100L) - Exact.eRow(col("l_discount"), 2)))
           .as("rev_e4"))
-      val ord = t(s, d, "orders")
+      val ord = fixture(s, d, "orders")
         .filter(col("o_orderdate") >= expr("TIMESTAMP '1997-01-01 00:00:00'"))
         .select(col("o_orderkey"), col("o_custkey"))
-      val sup = t(s, d, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      val cust = t(s, d, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val nat = t(s, d, "nation")
-      val reg = t(s, d, "region")
+      val sup = fixture(s, d, "supplier").select(col("s_suppkey"), col("s_nationkey"))
+      val cust = fixture(s, d, "customer").select(col("c_custkey"), col("c_nationkey"))
+      val nat = fixture(s, d, "nation")
+      val reg = fixture(s, d, "region")
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(sup, col("l_suppkey") === col("s_suppkey"))
         .join(cust, col("o_custkey") === col("c_custkey"))
@@ -954,12 +951,12 @@ object RelationalQueries extends QueryGroup {
    * is output-scale. */
   private val q18 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem").select(
+      val li = fixture(s, d, "lineitem").select(
         year(col("l_shipdate")).as("ship_year"), col("l_partkey"),
         (Exact.eRow(col("l_extendedprice"), 2) *
           (lit(100L) - Exact.eRow(col("l_discount"), 2)))
           .as("rev_e4"))
-      val part = t(s, d, "part")
+      val part = fixture(s, d, "part")
         .select(col("p_partkey"), col("p_type").startsWith("PROMO").as("promo"))
       li.join(part, col("l_partkey") === col("p_partkey"))
         .groupBy(col("ship_year"))
@@ -1003,10 +1000,10 @@ object RelationalQueries extends QueryGroup {
    * (output-scale). */
   private val q19 = QueryDef(
     (s, d) => {
-      val brand = t(s, d, "part")
+      val brand = fixture(s, d, "part")
         .filter(col("p_brand").isin("Brand#2", "Brand#3"))
         .select(col("p_partkey"), col("p_brand"))
-      val li = t(s, d, "lineitem").select(col("l_partkey"),
+      val li = fixture(s, d, "lineitem").select(col("l_partkey"),
         col("l_quantity").cast("long").as("qty"),
         Exact.eRow(col("l_extendedprice"), 2).as("price_cents"))
         .join(brand, col("l_partkey") === col("p_partkey"))
@@ -1045,7 +1042,7 @@ object RelationalQueries extends QueryGroup {
    * below the cut before the size-elected name join. */
   private val q20 = QueryDef(
     (s, d) => {
-      val perPart = t(s, d, "lineitem")
+      val perPart = fixture(s, d, "lineitem")
         .groupBy(col("l_partkey"))
         .agg(sum(Exact.eRow(col("l_extendedprice"), 2) *
           (lit(100L) - Exact.eRow(col("l_discount"), 2)))
@@ -1054,7 +1051,7 @@ object RelationalQueries extends QueryGroup {
         sum(col("part_e4")).as("total_e4"))
       perPart.crossJoin(broadcast(stats))
         .filter(col("part_e4") * col("n_parts") * 2 > col("total_e4") * 3)
-        .join(t(s, d, "part"),
+        .join(fixture(s, d, "part"),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_partkey").as("partkey"), col("p_name"),
           col("part_e4"))
@@ -1082,22 +1079,22 @@ object RelationalQueries extends QueryGroup {
    * partials and the top-20 is a TakeOrdered, never a global sort. */
   private val q21 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem")
+      val li = fixture(s, d, "lineitem")
         .filter(col("l_returnflag") === "R")
         .select(col("l_orderkey"),
           (Exact.eRow(col("l_extendedprice"), 2) *
             (lit(100L) - Exact.eRow(col("l_discount"), 2)))
             .as("rev_e4"))
-      val ord = t(s, d, "orders")
+      val ord = fixture(s, d, "orders")
         .filter(col("o_orderdate") >= expr("TIMESTAMP '1997-06-01 00:00:00'"))
         .select(col("o_orderkey"), col("o_custkey"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_custkey"))
         .agg(sum(col("rev_e4")).as("revenue_e4"),
           count(lit(1)).as("n_returned"))
-        .join(t(s, d, "customer"),
+        .join(fixture(s, d, "customer"),
           col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, d, "nation")),
+        .join(broadcast(fixture(s, d, "nation")),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("c_name"), col("n_name"),
           Exact.eRow(col("c_acctbal"), 2).as("acctbal_cents"),
@@ -1128,11 +1125,11 @@ object RelationalQueries extends QueryGroup {
    * matches); the priority aggregate is output-scale (5 rows). */
   private val q22 = QueryDef(
     (s, d) => {
-      val ord = t(s, d, "orders")
+      val ord = fixture(s, d, "orders")
         .filter(col("o_orderdate") >= expr("TIMESTAMP '1996-01-01 00:00:00'") &&
           col("o_orderdate") < expr("TIMESTAMP '1996-07-01 00:00:00'"))
         .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
+      val li = fixture(s, d, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
       ord.join(li,
           col("o_orderkey") === col("l_orderkey") &&
             col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
@@ -1159,11 +1156,11 @@ object RelationalQueries extends QueryGroup {
    * flag-cardinality rows. */
   private val q23 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem")
+      val li = fixture(s, d, "lineitem")
         .filter(col("l_shipdate") >= expr("TIMESTAMP '1996-01-01 00:00:00'") &&
           col("l_shipdate") < expr("TIMESTAMP '1997-01-01 00:00:00'"))
         .select(col("l_orderkey"), col("l_returnflag"))
-      val ord = t(s, d, "orders").select(col("o_orderkey"), col("o_orderpriority"))
+      val ord = fixture(s, d, "orders").select(col("o_orderkey"), col("o_orderpriority"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_returnflag"))
         .agg(
@@ -1195,7 +1192,7 @@ object RelationalQueries extends QueryGroup {
    * Shape at scale: one scan, one 1-row aggregate — embarrassingly
    * parallel, partial sums only. */
   private val q24 = QueryDef(
-    (s, d) => t(s, d, "lineitem")
+    (s, d) => fixture(s, d, "lineitem")
       .filter(col("l_shipdate") >= expr("TIMESTAMP '1997-01-01 00:00:00'") &&
         col("l_shipdate") < expr("TIMESTAMP '1998-01-01 00:00:00'") &&
         col("l_quantity") < 24)
@@ -1229,24 +1226,24 @@ object RelationalQueries extends QueryGroup {
    * downstream — measured +0.5 s on this query in the r18 hint sweep). */
   private val q25 = QueryDef(
     (s, d) => {
-      val nat = t(s, d, "nation")
-      val reg = t(s, d, "region").filter(col("r_name") === "ASIA")
+      val nat = fixture(s, d, "nation")
+      val reg = fixture(s, d, "region").filter(col("r_name") === "ASIA")
       val asiaNations = nat
         .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"),
           "left_semi")
         .select(col("n_nationkey"))
-      val cust = t(s, d, "customer")
+      val cust = fixture(s, d, "customer")
         .join(broadcast(asiaNations),
           col("c_nationkey") === col("n_nationkey"), "left_semi")
         .select(col("c_custkey"))
-      val ord = t(s, d, "orders")
+      val ord = fixture(s, d, "orders")
         .join(cust, col("o_custkey") === col("c_custkey"), "left_semi")
         .select(col("o_orderkey"), year(col("o_orderdate")).as("order_year"))
-      val sup = t(s, d, "supplier")
+      val sup = fixture(s, d, "supplier")
         .join(broadcast(nat.select(col("n_nationkey").as("sn_key"),
           col("n_name").as("sn_name"))), col("s_nationkey") === col("sn_key"))
         .select(col("s_suppkey"), (col("sn_name") === "NATION_7").as("is_target"))
-      val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
+      val li = fixture(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
         (Exact.eRow(col("l_extendedprice"), 2) *
           (lit(100L) - Exact.eRow(col("l_discount"), 2)))
           .as("rev_e4"))
@@ -1288,7 +1285,7 @@ object RelationalQueries extends QueryGroup {
    * plans ONE Expand + hash aggregate with map-side partials, not one
    * pass per set. Measures are exact integers (qty e2 / revenue e4). */
   private val q26 = QueryDef(
-    (s, d) => t(s, d, "lineitem")
+    (s, d) => fixture(s, d, "lineitem")
       .select(col("l_returnflag"), col("l_linestatus"),
         Exact.eRow(col("l_quantity"), 2).as("qty_e2"),
         (Exact.eRow(col("l_extendedprice"), 2) *
@@ -1330,7 +1327,7 @@ object RelationalQueries extends QueryGroup {
    * never data rows — the same discipline as the corpus-side p47. */
   private val q27 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem")
+      val li = fixture(s, d, "lineitem")
       graft.pipeline.CorpusOps.exactQuantiles(li,
           col("l_returnflag"),
           Exact.eRow(col("l_extendedprice"), 2),
@@ -1366,12 +1363,12 @@ object RelationalQueries extends QueryGroup {
    * set ops are key-cardinality work, never order-row work. */
   private val q28 = QueryDef(
     (s, d) => {
-      val ord = t(s, d, "orders")
+      val ord = fixture(s, d, "orders")
       def activeIn(y: Int) = ord
         .filter(year(col("o_orderdate")) === y).select(col("o_custkey"))
       val returned = ord
         .filter(year(col("o_orderdate")) === 1997)
-        .join(t(s, d, "lineitem").filter(col("l_returnflag") === "R"),
+        .join(fixture(s, d, "lineitem").filter(col("l_returnflag") === "R"),
           col("o_orderkey") === col("l_orderkey"), "left_semi")
         .select(col("o_custkey"))
       activeIn(1996).intersect(activeIn(1997)).except(returned)
@@ -1527,7 +1524,7 @@ object RelationalQueries extends QueryGroup {
    * prefixes. Exact integer measures. */
   private val q31 = QueryDef(
     (s, d) => {
-      val li = t(s, d, "lineitem")
+      val li = fixture(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_linestatus"),
           Exact.eRow(col("l_quantity"), 2).as("qty_e2"))
       // GROUPING SETS ((l_returnflag), (l_linestatus)) via SQL — the
@@ -1663,7 +1660,7 @@ object RelationalQueries extends QueryGroup {
     (s, d) => {
       val win = 3L * 86400000L
       def windows(prio: String, prefix: String) =
-        t(s, d, "orders").filter(col("o_orderpriority") === prio)
+        fixture(s, d, "orders").filter(col("o_orderpriority") === prio)
           .select(col("o_orderkey").as(s"${prefix}_key"),
             unix_millis(col("o_orderdate")).as(s"${prefix}_s"))
           .withColumn(s"${prefix}_e", col(s"${prefix}_s") + win)
@@ -1716,7 +1713,7 @@ object RelationalQueries extends QueryGroup {
       val byFlag = org.apache.spark.sql.expressions.Window
         .partitionBy(col("l_returnflag"))
       val ordered = byFlag.orderBy(col("qty_e2"))
-      t(s, d, "lineitem")
+      fixture(s, d, "lineitem")
         .select(col("l_returnflag"),
           Exact.eRow(col("l_quantity"), 2).as("qty_e2"))
         .groupBy(col("l_returnflag"), col("qty_e2"))
@@ -1786,13 +1783,13 @@ object RelationalQueries extends QueryGroup {
    * shuffles ONCE on the (nation, year) agg key at gate SF. */
   private val q35 = QueryDef(
     (s, d) => {
-      val widget = t(s, d, "part").filter(col("p_name").contains("widget"))
+      val widget = fixture(s, d, "part").filter(col("p_name").contains("widget"))
         .select(col("p_partkey"))
-      val sup = t(s, d, "supplier")
+      val sup = fixture(s, d, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"))
-      val nat = t(s, d, "nation")
+      val nat = fixture(s, d, "nation")
         .select(col("n_nationkey"), col("n_name"))
-      t(s, d, "lineitem")
+      fixture(s, d, "lineitem")
         .join(widget, col("l_partkey") === col("p_partkey"))
         .join(sup, col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))

@@ -1,6 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /**
  * The connector SPI (SURVEY §2.1 S9/S10) — the engine-facing shape of the
@@ -27,11 +33,33 @@ trait GraftSink[T] extends Serializable {
 
 object GraftIO {
 
+  /** The fixture table `dir/table.parquet` (one file, or a directory of
+   * part files), read under the schema Spark's inference would give it.
+   * The schema comes from the first data file's footer, read on the
+   * driver through inference's own converter under the session conf:
+   * the Spark row metadata of a Spark-written file if it has one, else
+   * the parquet schema (`nanosAsLong`, `inferTimestampNTZ` applied). So
+   * the read runs no schema-inference job, and declares nothing that
+   * could drift from the files. */
+  def fixture(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = new Path(s"$dir/$table.parquet")
+    val conf = spark.sessionState.newHadoopConf()
+    val first = path.getFileSystem(conf).listStatus(path)
+      .filter(f => f.isFile && !f.getPath.getName.matches("[_.].*"))
+      .minBy(_.getPath.toString)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, conf), SKIP_ROW_GROUPS)
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path.toString)
+  }
+
   /** Whether `dir` exists and holds at least one entry, asked of the
    * path's own Hadoop `FileSystem`: a `file://`, `hdfs://` or `s3a://`
    * table is seen the same way Spark's reader and writer see it. */
   def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(path) && fs.listStatus(path).nonEmpty
   }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
  *
  * The four public helpers differ only in the block fold (count, sum or
  * max), the fold direction and the row window; all of them run the one
- * private body `twoLevel`. The produce path's keyless router needs a
+ * private body `prefixBody`. The produce path's keyless router needs a
  * route that depends on the global position, so [[Produce.build]] keeps
  * its own (block, route class) summary instead.
  */
@@ -60,7 +60,7 @@ object Sequencing {
    * row window inside (key, block) ordered by `orderCol` (descending
    * when `desc`, which also folds newer blocks first).
    */
-  private def twoLevel(env: DataFrame, keyCols: Seq[String], blockCol: String,
+  private def prefixBody(env: DataFrame, keyCols: Seq[String], blockCol: String,
       orderCol: String, outCol: String, rowVal: Option[Column], blockAgg: Column,
       isMax: Boolean, desc: Boolean)(rowExpr: (WindowSpec, Column) => Column): DataFrame = {
     val rows = rowVal.fold(env)(env.withColumn("_rowval", _))
@@ -84,7 +84,7 @@ object Sequencing {
    */
   def keyedSequence(env: DataFrame, keyCols: Seq[String], blockCol: String,
       orderCol: String, outCol: String): DataFrame =
-    twoLevel(env, keyCols, blockCol, orderCol, outCol, None, count(lit(1)),
+    prefixBody(env, keyCols, blockCol, orderCol, outCol, None, count(lit(1)),
       isMax = false, desc = false) { (w, prefix) => prefix + row_number().over(w) - 1 }
 
   /**
@@ -95,7 +95,7 @@ object Sequencing {
    */
   def keyedRunningMaxExcl(env: DataFrame, keyCols: Seq[String], blockCol: String,
       orderCol: String, valueExpr: Column, outCol: String): DataFrame =
-    twoLevel(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
+    prefixBody(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
       max(col("_rowval")), isMax = true, desc = false) { (w, prefix) =>
       greatest(
         coalesce(max(col("_rowval")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
@@ -111,7 +111,7 @@ object Sequencing {
    */
   def keyedCumSumExcl(env: DataFrame, keyCols: Seq[String], blockCol: String,
       orderCol: String, valueExpr: Column, outCol: String): DataFrame =
-    twoLevel(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
+    prefixBody(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
       sum(col("_rowval")), isMax = false, desc = false) { (w, prefix) =>
       prefix + coalesce(sum(col("_rowval"))
         .over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
@@ -124,7 +124,7 @@ object Sequencing {
    */
   def keyedCumSumDesc(env: DataFrame, keyCols: Seq[String], blockCol: String,
       orderCol: String, valueExpr: Column, outCol: String): DataFrame =
-    twoLevel(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
+    prefixBody(env, keyCols, blockCol, orderCol, outCol, Some(valueExpr),
       sum(col("_rowval")), isMax = false, desc = true) { (w, prefix) =>
       prefix + sum(col("_rowval")).over(w.rowsBetween(Window.unboundedPreceding, 0))
     }

@@ -110,21 +110,16 @@ object CorpusOps {
    * n(n²−1)) accumulate in DECIMAL(38,0) — the p110/q38 convention — so
    * the rational never wraps at any stratum size the rank window itself
    * can survive; only the DISPLAY column `sum_d2` casts back to BIGINT
-   * (exact to ~3×10⁶ rows per stratum; at corpus scale compute on a
-   * deterministic hash sample via stratifiedSample, which is how
-   * production systems bound rank statistics anyway).
+   * (exact to ~3×10⁶ rows per stratum; `rho_e6` stays exact past it).
    */
   def spearman(df: DataFrame, stratumCol: Column, xCol: Column,
-      yCol: Column, idCol: Column): DataFrame =
-    spearmanCore(df.select(stratumCol.as("stratum"),
-      xCol.cast("long").as("x"), yCol.cast("long").as("y"), idCol.as("id")))
-
-  private def spearmanCore(base: DataFrame): DataFrame = {
+      yCol: Column, idCol: Column): DataFrame = {
     val rx = row_number().over(Window.partitionBy(col("stratum"))
       .orderBy(col("x"), col("id")))
     val ry = row_number().over(Window.partitionBy(col("stratum"))
       .orderBy(col("y"), col("id")))
-    base
+    df.select(stratumCol.as("stratum"), xCol.cast("long").as("x"),
+        yCol.cast("long").as("y"), idCol.as("id"))
       .withColumn("rx", rx.cast("long"))
       .withColumn("ry", ry.cast("long"))
       .withColumn("d", col("rx") - col("ry"))
@@ -137,50 +132,6 @@ object CorpusOps {
           "(CAST(n AS DECIMAL(38,0)) * (n - 1) * (n + 1))"))
       .select(col("stratum"), col("n"),
         col("sum_d2_dec").cast("long").as("sum_d2"), col("rho_e6"))
-  }
-
-  /**
-   * [[spearman]] with the corpus-scale escape PROMOTED TO CODE (the
-   * GraphOps measured-size convention): stratum sizes are measured first
-   * (one hash aggregate, |strata| rows collected); a stratum within
-   * `maxRowsPerStratum` computes the exact statistic, while an oversize
-   * stratum first takes a DETERMINISTIC md5 hash sample targeting the
-   * bound — keep iff u32·n < maxRows·2³², an exact integer
-   * cross-multiplication on the row's hash, reproducible across engines
-   * and runs (the sampling-lineage requirement) — and computes the
-   * identical statistic on the sample. Within the bound the two paths
-   * are bit-identical (spec-pinned); past it the rank windows never see
-   * more than ~maxRows rows per stratum, which is what keeps the
-   * n·(n²−1) arithmetic AND the window state bounded at 100 TB.
-   */
-  def spearmanAuto(df: DataFrame, stratumCol: Column, xCol: Column,
-      yCol: Column, idCol: Column,
-      maxRowsPerStratum: Long = 2000000L): DataFrame = {
-    require(maxRowsPerStratum >= 2)
-    val base = df.select(stratumCol.as("stratum"),
-      xCol.cast("long").as("x"), yCol.cast("long").as("y"), idCol.as("id"))
-    // the branch decision stays RELATIONAL — a |strata|-row broadcast of
-    // only the oversize strata, joined back on the NATIVE stratum type
-    // (no driver collect, no string coercion that could alias distinct
-    // keys); when nothing is oversize the join finds no match and the
-    // filter passes every row, which IS the exact path. The join is
-    // NULL-SAFE (<=>): groupBy treats NULL as a stratum of its own, so
-    // an oversize NULL stratum must take the sampled path exactly like
-    // any other key instead of slipping through a null-rejecting
-    // equi-join unsampled
-    val over = broadcast(base.groupBy(col("stratum"))
-      .agg(count(lit(1)).as("n_all"))
-      .filter(col("n_all") > maxRowsPerStratum)
-      .withColumnRenamed("stratum", "over_stratum"))
-    val u32 = expr("CAST(conv(substring(md5(CAST(id AS STRING)), 1, 8), " +
-      "16, 10) AS DECIMAL(38,0))")
-    val sampled = base.join(over, col("stratum") <=> col("over_stratum"),
-        "left")
-      .filter(col("n_all").isNull ||
-        u32 * col("n_all") < lit(maxRowsPerStratum).cast("decimal(38,0)") *
-          lit(4294967296L))
-      .drop("n_all", "over_stratum")
-    spearmanCore(sampled)
   }
 
   // ------------------------------------------- KS distribution audit
@@ -247,10 +198,8 @@ object CorpusOps {
    * — the "is this crawl's length profile an outlier" screen, with no
    * normal approximation and no float anywhere.
    *
-   * Shape at 100 TB: one global rank — by design a total order, so at
-   * corpus scale substitute the histogram rank (exactQuantiles' cum
-   * relation gives every row's rank without a global sort); here the
-   * window keeps the declared tie-break exact. Everything after is
+   * Shape: one global rank — by design a total order, so the window
+   * keeps the declared tie-break exact. Everything after is
    * |strata|-row arithmetic, all of it in DECIMAL(38,0) (the p110/q38
    * convention) via the doubled form 2U = 2·ΣR − n(n+1), so neither the
    * rank sum nor the ×10⁶ PPM scaling can wrap; only the DISPLAY columns
@@ -267,13 +216,6 @@ object CorpusOps {
     val doubled = ranked.groupBy(col("stratum"))
       .agg(count(lit(1)).as("n"),
         expr("2 * sum(CAST(r AS DECIMAL(38,0)))").as("rank_sum2"))
-    rankSumFinish(doubled)
-  }
-
-  /** Shared tail of both rank-sum paths: from (stratum, n, 2·ΣR) rows —
-   * 2U = 2·ΣR − n(n+1) stays integral even under the histogram path's
-   * half-integer average ranks, so u_ppm is exact on either path. */
-  private def rankSumFinish(doubled: DataFrame): DataFrame = {
     val totals = doubled.agg(sum(col("n")).as("n_all"))
     doubled
       .crossJoin(broadcast(totals))
@@ -290,48 +232,6 @@ object CorpusOps {
         col("u_max_dec").cast("long").as("u_max"), col("u_ppm"))
   }
 
-  /**
-   * [[rankSumAudit]] with the corpus-scale escape PROMOTED TO CODE (the
-   * GraphOps measured-size convention): within `maxRowsForWindow` total
-   * rows the exact global rank window runs (declared (value, id)
-   * tie-break); past it the rank SUM comes from the VALUE HISTOGRAM —
-   * one (stratum, value) hash aggregate plus a cumulative window over
-   * DISTINCT VALUES, never a row-scale sort. The histogram cannot see
-   * ids, so ties take the TEXTBOOK average rank (2·rank = 2·cum_before +
-   * c_v + 1 per tied row — integral in the doubled form): on tie-free
-   * data the two paths are bit-identical (spec-pinned), and with ties
-   * the histogram path IS the classical Mann–Whitney U, which is the
-   * statistic production systems quote anyway. rank_sum/u_stat display
-   * columns truncate the doubled form; u_ppm is computed untruncated.
-   */
-  def rankSumAuditAuto(df: DataFrame, stratumCol: Column, valueCol: Column,
-      idCol: Column, maxRowsForWindow: Long = 2000000000L): DataFrame = {
-    val base = df.select(stratumCol.as("stratum"),
-      valueCol.cast("long").as("v"), idCol.as("id"))
-    // the branch decision comes from the HISTOGRAM aggregate — the same
-    // relation the scale path consumes twice (cached, so the scale path
-    // costs ONE corpus scan; a bare count() would be a throwaway pass).
-    // The exact path pays a second row-scale scan for its rank window —
-    // unavoidable, the histogram cannot see ids — so it releases the
-    // histogram immediately instead of pinning it until releaseAll
-    val hist = graft.CacheScope.track(base.groupBy(col("stratum"), col("v"))
-      .agg(count(lit(1)).as("c")))
-    val total = hist.agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
-    if (total <= maxRowsForWindow) {
-      hist.unpersist(blocking = false)
-      return rankSumAudit(df, stratumCol, valueCol, idCol)
-    }
-    val hv = hist.groupBy(col("v")).agg(sum(col("c")).as("cv"))
-      .withColumn("cum_before",
-        sum(col("cv")).over(Window.orderBy(col("v"))) - col("cv"))
-    val doubled = hist.join(hv, Seq("v"))
-      .groupBy(col("stratum"))
-      .agg(expr("CAST(sum(c) AS BIGINT)").as("n"),
-        expr("sum(CAST(c AS DECIMAL(38,0)) * (2 * cum_before + cv + 1))")
-          .as("rank_sum2"))
-    rankSumFinish(doubled)
-  }
-
   // ------------------------------------------- exact AUC audit
 
   /**
@@ -340,10 +240,10 @@ object CorpusOps {
    * quality filter ships with. Computed by the Mann–Whitney identity
    * AUC = U/(n⁺·n⁻) with the statistically-correct AVERAGE rank for
    * tied scores, over the (stratum, score) HISTOGRAM — never a
-   * row-scale sort (the [[rankSumAuditAuto]] histogram machinery: the
-   * doubled rank 2·cum_before + c + 1 keeps half-ranks integral, all
-   * products in DECIMAL(38,0)). auc_ppm is one integer division; NULL
-   * when a stratum has no positives or no negatives (AUC undefined).
+   * row-scale sort (the doubled rank 2·cum_before + c + 1 keeps
+   * half-ranks integral, all products in DECIMAL(38,0)). auc_ppm is one
+   * integer division; NULL when a stratum has no positives or no
+   * negatives (AUC undefined).
    *
    * Shape at 100 TB: one (stratum, score) hash aggregate with map-side
    * partials, a cumulative window over DISTINCT scores, a |strata|-row
@@ -1123,30 +1023,22 @@ object CorpusOps {
    * across engines.
    *
    * Shape: the corpus collapses to (group, value, count) in one hash
-   * aggregate with map-side partials. Selection then branches on the
-   * MEASURED histogram size (the localPageRank fast-path discipline —
-   * the histogram is tracked, so the count is a cheap cache action and
-   * both paths read the warmed cache):
-   *   - ndv ≤ 2²⁰: ONE running-count window over the histogram — two
-   *     histogram passes total, the cheapest plan at gate scale
-   *     (measured r21: the two-level form below costs +80 % on q27 here,
-   *     extra cached-histogram passes dominating);
-   *   - ndv > 2²⁰ (prices/e4 scores at corpus scale — the domains where
-   *     "histogram-scale" quietly means row-scale and the single window
-   *     becomes a per-GROUP single-task sort): TWO-LEVEL selection — a
-   *     bucket-scale cumulative window over 2^16-wide value buckets
-   *     locates each rank's bucket and the count strictly below it, and
-   *     a within-bucket running sum over ≤ 2^16 distinct values picks
-   *     the exact value. No window ever runs over the full histogram.
-   * Both paths select the identical value (cum decomposes exactly at
-   * bucket boundaries; CorpusSpec pins them against each other).
+   * aggregate with map-side partials, and ONE running-count window over
+   * that histogram selects every requested rank: two histogram passes
+   * in one plan (the per-group totals and the running count), no driver
+   * action. The window sorts each group's distinct values in one task,
+   * so a group's ndv, not its row count, bounds that task.
    * Contrast with sort-based quantiles (a full shuffle-sort of every
    * row) or approx_percentile (no exactness guarantee).
    */
   def exactQuantiles(df: DataFrame, group: Column, value: Column,
       quantiles: Seq[(Int, Int)]): DataFrame = {
-    // one corpus scan: the histogram feeds the running count, the
-    // per-group totals, and (on the large-ndv path) the bucket layer.
+    require(quantiles.nonEmpty &&
+      quantiles.forall { case (n, d) => n >= 0 && n <= d && d > 0 },
+      s"quantiles must be rationals in [0,1], got $quantiles")
+    // one corpus scan: the plan reads the histogram twice (the per-group
+    // totals and the running count), so it is tracked and both reads
+    // share one cached build.
     // NULL values are excluded EXPLICITLY: Spark windows order NULLS
     // FIRST, DuckDB NULLS LAST, so a null value would silently shift
     // every rank between engines — the quantile domain is non-null.
@@ -1154,19 +1046,6 @@ object CorpusOps {
       .select(group.cast("string").as("source"), value.cast("long").as("v"))
       .where(col("v").isNotNull)
       .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c")))
-    // measured-size branch (scaladoc above): the count is an action on
-    // the tracked histogram — it materializes the cache both paths read
-    exactQuantilesOver(hist, quantiles, twoLevel = hist.count() > (1L << 20))
-  }
-
-  /** Selection over a prebuilt (source, v, c) histogram — split out so
-   * the spec can pin the single-level and two-level paths against each
-   * other on the same fixture. */
-  private[graft] def exactQuantilesOver(hist: DataFrame,
-      quantiles: Seq[(Int, Int)], twoLevel: Boolean): DataFrame = {
-    require(quantiles.nonEmpty &&
-      quantiles.forall { case (n, d) => n >= 0 && n <= d && d > 0 },
-      s"quantiles must be rationals in [0,1], got $quantiles")
     val totals = hist.groupBy(col("source")).agg(sum(col("c")).as("n"))
     val qdf = totals
       .select(col("source"), col("n"), explode(array(quantiles.map {
@@ -1176,50 +1055,13 @@ object CorpusOps {
       .select(col("source"), col("n"),
         Exact.rRow(col("qq.qnum") / col("qq.qden"), 4).as("q"),
         expr("(qq.qnum * n + qq.qden - 1) div qq.qden").as("rank"))
-    if (!twoLevel) {
-      val cum = hist.withColumn("cum",
-        sum(col("c")).over(Window.partitionBy(col("source")).orderBy(col("v"))))
-      qdf.join(cum, Seq("source"))
-        .where(col("cum") >= col("rank"))
-        .groupBy(col("source"), col("q"), col("n"), col("rank"))
-        .agg(min(col("v")).as("value"))
-        .select(col("source"), col("q"), col("n"), col("rank"), col("value"))
-    } else {
-      // Level 1: 2^16-wide value buckets (ARITHMETIC shift — monotone
-      // for negative values too); the bucket-scale cumulative window
-      // locates each rank's bucket and the count strictly below it.
-      // Level 2: the running sum touches only the target bucket's
-      // ≤ 2^16 distinct values. Identical selection: the smallest v
-      // with cum(v) ≥ rank lies in the smallest bucket whose cumulative
-      // count reaches rank, at the smallest v with
-      // below + cumWithin(v) ≥ rank (cum decomposes exactly at bucket
-      // boundaries).
-      val bhist = hist
-        .groupBy(col("source"), shiftright(col("v"), 16).as("b"))
-        .agg(sum(col("c")).as("bc"))
-      val bcum = bhist.withColumn("bcum",
-        sum(col("bc")).over(Window.partitionBy(col("source")).orderBy(col("b"))))
-      val target = qdf.join(bcum, Seq("source"))
-        .where(col("bcum") >= col("rank"))
-        .groupBy(col("source"), col("q"), col("n"), col("rank"))
-        .agg(min(col("b")).as("tb"),
-          min_by(col("bcum") - col("bc"), col("b")).as("below"))
-      target
-        .join(hist.withColumn("b", shiftright(col("v"), 16)),
-          Seq("source"))
-        .where(col("b") === col("tb"))
-        // one window partition per requested quantile: q is rounded to
-        // 4 dp, so two rationals can share it with different ranks (1/3
-        // and 3333/10000) — keyed by q alone, their target-bucket rows
-        // would mix into one running sum
-        .withColumn("cum", col("below") + sum(col("c")).over(
-          Window.partitionBy(col("source"), col("q"), col("rank"))
-            .orderBy(col("v"))))
-        .where(col("cum") >= col("rank"))
-        .groupBy(col("source"), col("q"), col("n"), col("rank"))
-        .agg(min(col("v")).as("value"))
-        .select(col("source"), col("q"), col("n"), col("rank"), col("value"))
-    }
+    val cum = hist.withColumn("cum",
+      sum(col("c")).over(Window.partitionBy(col("source")).orderBy(col("v"))))
+    qdf.join(cum, Seq("source"))
+      .where(col("cum") >= col("rank"))
+      .groupBy(col("source"), col("q"), col("n"), col("rank"))
+      .agg(min(col("v")).as("value"))
+      .select(col("source"), col("q"), col("n"), col("rank"), col("value"))
   }
 
   // ------------------------------------------------- character entropy

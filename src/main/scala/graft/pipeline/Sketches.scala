@@ -355,7 +355,8 @@ object Sketches {
    * group. The 100 TB role: percentiles over any positive measure
    * (doc lengths, latencies, token counts) in one linear pass — the
    * guaranteed-relative-error alternative to [[CorpusOps.exactQuantiles]]'
-   * order-statistic selection.
+   * order-statistic selection, whose running-count window sorts each
+   * group's distinct values in one task.
    *
    * Determinism: log_γ is ln(x) divided by a PRE-COMPUTED double ln(γ)
    * (the same literal on the engine and oracle sides), and the ratio is

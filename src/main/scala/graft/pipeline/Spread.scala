@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** The single-task-scan spread, made scale-adaptive (r20 verdict item 3).
  *
@@ -24,13 +26,22 @@ import org.apache.spark.sql.{Column, DataFrame}
  *
  * The partition count is read from the UNOPTIMIZED physical plan of `df`
  * (driver-side, no job): every call site passes a narrow scan-projection
- * relation, so building its RDD lineage costs planning only. Keyed spread
+ * relation, so building its RDD lineage costs planning only. An input
+ * whose physical plan holds an exchange, or is adaptive, is rejected
+ * before that probe: under AQE, building its RDD runs the shuffle
+ * stages as jobs, and an exchange's partition count says nothing about
+ * the scan's splits anyway. Keyed spread
  * (hash on the row id) rather than round-robin: round-robin pays a local
  * sort of the input (sortBeforeRepartition) and the id key feeds the
  * downstream per-doc aggregations the same way the old form did.
  */
 object Spread {
   def ifNarrow(df: DataFrame, key: Column): DataFrame = {
+    val plan = df.queryExecution.executedPlan
+    require(!plan.isInstanceOf[AdaptiveSparkPlanExec] &&
+      plan.find(_.isInstanceOf[Exchange]).isEmpty,
+      "Spread.ifNarrow takes a scan-projection relation; this plan holds " +
+        s"an exchange or is adaptive:\n$plan")
     val parts = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
     if (df.rdd.getNumPartitions < parts) df.repartition(parts, key) else df

@@ -1953,33 +1953,17 @@ object CorpusQueries extends QueryGroup {
     // token count — declared (value, doc_id) tie-break makes both rank
     // sequences permutations, so ρ×10⁶ is one integer division. The
     // oracle replays both rank windows and the rational.
-    // spearmanAuto: the 2M-row/stratum bound takes the exact path at
-    // every gate SF; an oversize stratum would hash-sample first (the
-    // promoted corpus-scale branch, spec-pinned for path parity)
-    (s, d) => CorpusOps.spearmanAuto(fixture(s, d, "documents"), col("source"),
+    (s, d) => CorpusOps.spearman(fixture(s, d, "documents"), col("source"),
         col("n_chars"),
         graft.pipeline.TextOps.tokenCount(coalesce(col("text"), lit(""))),
         col("doc_id"))
       .select(col("stratum").as("source"), col("n"), col("sum_d2"),
         col("rho_e6"))
       .orderBy(col("source")),
-    Some(s"""WITH b0 AS (
+    Some(s"""WITH b AS (
       |  SELECT source, n_chars AS x, CAST(len($WORDS) AS BIGINT) AS y,
       |         doc_id AS id
       |  FROM documents),
-      |sz AS (SELECT source, count(*) AS n_all FROM b0 GROUP BY source),
-      |b AS (
-      |  -- replay of spearmanAuto's promoted branch: an oversize stratum
-      |  -- keeps only rows passing u32·n < maxRows·2^32 (a no-op at every
-      |  -- SF under the 2M bound, but the rule travels with the oracle).
-      |  -- Null-safe join: a NULL-source stratum takes the same path as
-      |  -- the engine's <=> join instead of being dropped
-      |  SELECT b0.source, b0.x, b0.y, b0.id
-      |  FROM b0 JOIN sz ON b0.source IS NOT DISTINCT FROM sz.source
-      |  WHERE sz.n_all <= 2000000
-      |     OR CAST(CAST(('0x' || substr(md5(CAST(b0.id AS VARCHAR)), 1, 8))
-      |          AS UBIGINT) AS HUGEINT) * sz.n_all
-      |        < CAST(2000000 AS HUGEINT) * 4294967296),
       |r AS (SELECT source,
       |             CAST(row_number() OVER (PARTITION BY source
       |               ORDER BY x, id) AS BIGINT) AS rx,
@@ -1999,37 +1983,19 @@ object CorpusQueries extends QueryGroup {
     // length profile: exact integer U from one global (n_chars, doc_id)
     // ranking, normalized to PPM of its max. Oracle replays the rank
     // window and the arithmetic.
-    // rankSumAuditAuto: under the 2e9-row bound the exact window path
-    // runs at every gate SF; past it the histogram-rank branch (the
-    // promoted corpus-scale escape, spec-pinned) takes over
-    (s, d) => CorpusOps.rankSumAuditAuto(fixture(s, d, "documents"), col("source"),
+    (s, d) => CorpusOps.rankSumAudit(fixture(s, d, "documents"), col("source"),
         col("n_chars"), col("doc_id"))
       .select(col("stratum").as("source"), col("n"), col("rank_sum"),
         col("u_stat"), col("u_max"), col("u_ppm"))
       .orderBy(col("source")),
     Some("""WITH r0 AS (SELECT source, n_chars, doc_id FROM documents),
-      |tot AS (SELECT count(*) AS t FROM r0),
-      |-- window path (active at every SF under the 2e9 bound)
       |wr AS (SELECT source,
       |              CAST(row_number() OVER (ORDER BY n_chars, doc_id)
       |                AS BIGINT) AS r
-      |       FROM r0, tot WHERE t <= 2000000000),
-      |wa AS (SELECT source, count(*) AS n,
-      |              2 * CAST(sum(r) AS HUGEINT) AS rank_sum2
-      |       FROM wr GROUP BY source),
-      |-- histogram path: rankSumAuditAuto's promoted branch (average-rank
-      |-- ties in the doubled form), guarded so exactly one branch emits
-      |h AS (SELECT source, n_chars AS v, count(*) AS c
-      |      FROM r0, tot WHERE t > 2000000000 GROUP BY 1, 2),
-      |hv AS (SELECT v, sum(c) AS cv,
-      |              sum(sum(c)) OVER (ORDER BY v) - sum(c) AS cum_before
-      |       FROM h GROUP BY v),
-      |ha AS (SELECT h.source, CAST(sum(h.c) AS BIGINT) AS n,
-      |              CAST(sum(CAST(h.c AS HUGEINT) *
-      |                (2 * hv.cum_before + hv.cv + 1)) AS HUGEINT)
-      |                AS rank_sum2
-      |       FROM h JOIN hv ON h.v = hv.v GROUP BY h.source),
-      |u AS (SELECT * FROM wa UNION ALL SELECT * FROM ha),
+      |       FROM r0),
+      |u AS (SELECT source, count(*) AS n,
+      |             2 * CAST(sum(r) AS HUGEINT) AS rank_sum2
+      |      FROM wr GROUP BY source),
       |t2 AS (SELECT sum(n) AS n_all FROM u),
       |fin AS (SELECT source, n, rank_sum2,
       |               rank_sum2 - CAST(n AS HUGEINT) * (n + 1) AS u2,

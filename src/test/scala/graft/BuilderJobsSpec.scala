@@ -13,22 +13,18 @@ import org.scalatest.funsuite.AnyFunSuite
  */
 class BuilderJobsSpec extends AnyFunSuite {
 
-  // 31 queries, 315 jobs at most; every other query runs none. Two vary
+  // 22 queries, 251 jobs at most; every other query runs none. Two vary
   // from walk to walk with AQE's planning of their eager writes (parquet
   // at Produce.scala:158): m11_auto_produce ran 9 or 10, s1 18 or 19.
   private val Allowed: Map[String, Int] = Map(
     "m11_auto_produce" -> 10, "m9_registry_persist" -> 17,
-    "p105_rank_sum" -> 4, "p107_data_card" -> 4, "p115_mad_outliers" -> 13,
     "p117_keep_longest" -> 16, "p123_hnsw_recall" -> 41,
     "p128_hnsw_append_audit" -> 45, "p132_ivfpq_topk" -> 17,
     "p137_planted_ivfpq_recall" -> 19, "p17_cosine_neardup" -> 2,
     "p18_dup_clusters" -> 3, "p34_bpe_tokenize" -> 2,
-    "p47_exact_quantiles" -> 4, "p51_leakage_free_split" -> 3,
-    "p63_mutual_knn_components" -> 17, "p65_quality_gate" -> 5,
-    "p75_embedding_audit" -> 5, "p81_length_batch_plan" -> 4,
+    "p51_leakage_free_split" -> 3, "p63_mutual_knn_components" -> 17,
     "p83_knn_pagerank" -> 3, "p91_pca_power" -> 9,
-    "p99_image_dup_components" -> 7, "q27_price_quantiles" -> 4,
-    "q32_rfm_segments" -> 21, "r12_join_fence" -> 3,
+    "p99_image_dup_components" -> 7, "r12_join_fence" -> 3,
     "r13_draining_hashes" -> 2, "s10_sink_roundtrip" -> 1,
     "s16_bucketed_topic" -> 3, "s1_produce_roundtrip" -> 19,
     "t1_txn_roundtrip" -> 8, "u11_batch_cycles" -> 4)
@@ -37,9 +33,9 @@ class BuilderJobsSpec extends AnyFunSuite {
     val jobs = SurfaceWalk.facts.toSeq.sortBy(_._1).map { case (n, f) => n -> f.buildJobs }
     val total = jobs.map(_._2).sum
     val running = jobs.count(_._2 > 0)
-    info(s"$total build jobs; $running of ${jobs.size} queries run at least one")
+    val all = jobs.filter(_._2 > 0).map { case (n, j) => s"$n=$j" }.mkString(" ")
+    info(s"$total build jobs; $running of ${jobs.size} queries run at least one: $all")
     val over = jobs.filter { case (n, j) => j > Allowed.getOrElse(n, 0) }
-    assert(over.isEmpty, "over the allowlist: " + over.mkString(" ") +
-      "; all: " + jobs.filter(_._2 > 0).map { case (n, j) => s"$n=$j" }.mkString(" "))
+    assert(over.isEmpty, "over the allowlist: " + over.mkString(" ") + "; all: " + all)
   }
 }

@@ -475,34 +475,20 @@ class CorpusSpec extends AnyFunSuite {
       assert(got((g, rank)) === expected,
         s"g=$g q=$num/$den rank=$rank")
     }
-    // the measured-size branch: single-level and two-level selection
-    // must pick IDENTICAL rows from the same histogram — including
-    // values spread across several 2^16 buckets and negative values
-    // (arithmetic shift keeps bucket order monotone)
-    val wide = (rows.map { case (g, v) => (g, v * 100000L - 1500000L) } ++
-      Seq(("a", -3000000L), ("a", 9999999L)))
-    val hist = wide.toDF("source", "v").groupBy(col("source"), col("v"))
-      .agg(count(lit(1)).as("c"))
-    val one = CorpusOps.exactQuantilesOver(hist, qs, twoLevel = false)
-      .collect().map(_.toSeq).toSet
-    val two = CorpusOps.exactQuantilesOver(hist, qs, twoLevel = true)
-      .collect().map(_.toSeq).toSet
-    assert(one === two, "single-level and two-level selection diverged")
   }
 
-  test("two-level quantiles keep apart rationals that round to one q") {
+  test("exact quantiles keep apart rationals that round to one q") {
     // 1/3 and 3333/10000 both round to q = 0.3333, but over n = 10,000
-    // their ranks are 3334 and 3333, and both land in value bucket 0:
-    // the within-bucket running sum must not mix the two selections
-    val hist = spark.range(10000)
-      .select(lit("s").as("source"), col("id").as("v"), lit(1L).as("c"))
-    val qs = Seq((1, 3), (3333, 10000))
-    val one = CorpusOps.exactQuantilesOver(hist, qs, twoLevel = false)
-      .collect().map(_.toSeq).toSet
-    val two = CorpusOps.exactQuantilesOver(hist, qs, twoLevel = true)
-      .collect().map(_.toSeq).toSet
-    assert(one.size === 2)
-    assert(one === two, "single-level and two-level selection diverged")
+    // their ranks are 3334 and 3333: the running count must select each
+    // rank on its own instead of folding the two into one row
+    val d = spark.range(10000).select(lit("s").as("g"), col("id").as("v"))
+    val got = CorpusOps.exactQuantiles(d, col("g"), col("v"),
+        Seq((1, 3), (3333, 10000)))
+      .collect().map(r => (r.getString(0), r.getAs[Double]("q"),
+        r.getAs[Long]("n"), r.getAs[Long]("rank"), r.getAs[Long]("value")))
+      .toSet
+    assert(got === Set(("s", 0.3333, 10000L, 3334L, 3333L),
+      ("s", 0.3333, 10000L, 3333L, 3332L)))
   }
 
   test("LM perplexity: hand-computed bigram scores, OOV and keep flag") {
@@ -945,69 +931,6 @@ class CorpusSpec extends AnyFunSuite {
     assert(got.keySet === Set("s", "t"))
     assert(got("s") === ((3L, 2L, 500000L)))
     assert(got("t") === ((3L, 8L, -1000000L)))
-  }
-
-  test("spearmanAuto: exact path within the bound, hash-sample path " +
-      "equals the statistic over the independently-replayed keep set") {
-    import spark.implicits._
-    val rows = (0L until 50L).map(i => (i, (i * 3) % 17, (i * 7 + 1) % 23,
-      "s")) ++ (100L until 110L).map(i => (i, i % 5, (i * 11) % 13, "t"))
-    val d = rows.toDF("doc_id", "x", "y", "stratum")
-    def run(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getString(0) ->
-        (r.getAs[Long]("n"), r.getAs[Long]("sum_d2"),
-          r.getAs[Long]("rho_e6"))).toMap
-    val exact = run(CorpusOps.spearman(d, col("stratum"), col("x"),
-      col("y"), col("doc_id")))
-    // bound not exceeded → bit-identical to the exact path
-    val auto = run(CorpusOps.spearmanAuto(d, col("stratum"), col("x"),
-      col("y"), col("doc_id"), maxRowsPerStratum = 60))
-    assert(auto === exact)
-    // bound 10: stratum s (50 rows) samples, stratum t (10 rows) doesn't.
-    // Replay the keep rule driver-side: u32(md5(id)) · 50 < 10 · 2³²
-    def u32(id: Long): Long = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(8), 16)
-    val keptIds = (0L until 50L)
-      .filter(i => BigInt(u32(i)) * 50 < BigInt(10) * BigInt(2).pow(32))
-      .toSet
-    assert(keptIds.nonEmpty && keptIds.size < 50, "fixture must sample")
-    val replay = run(CorpusOps.spearman(
-      d.filter(col("stratum") === "t" || col("doc_id").isin(
-        keptIds.toSeq: _*)),
-      col("stratum"), col("x"), col("y"), col("doc_id")))
-    val sampled = run(CorpusOps.spearmanAuto(d, col("stratum"), col("x"),
-      col("y"), col("doc_id"), maxRowsPerStratum = 10))
-    assert(sampled === replay)
-    assert(sampled("t") === exact("t")) // under-bound stratum untouched
-  }
-
-  test("rankSumAuditAuto: histogram path is bit-identical to the window " +
-      "path on tie-free data; average-rank U with ties by hand") {
-    import spark.implicits._
-    // tie-free: force the histogram path (bound 0) and compare columns
-    val tf = Seq((1L, 10L, "a"), (2L, 40L, "a"), (3L, 20L, "b"),
-      (4L, 30L, "b"), (5L, 50L, "c")).toDF("doc_id", "v", "stratum")
-    def run(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getString(0) ->
-        (r.getAs[Long]("n"), r.getAs[Long]("rank_sum"),
-          r.getAs[Long]("u_stat"), r.getAs[Long]("u_max"),
-          r.getAs[Long]("u_ppm"))).toMap
-    val win = run(CorpusOps.rankSumAudit(tf, col("stratum"), col("v"),
-      col("doc_id")))
-    val hist = run(CorpusOps.rankSumAuditAuto(tf, col("stratum"), col("v"),
-      col("doc_id"), maxRowsForWindow = 0))
-    assert(hist === win)
-    // ties: A = {1, 2, 2}, B = {2, 3}; the three 2s share average rank 3
-    // → ΣR_A = 1+3+3 = 7, U_A = 1, ppm 166666; ΣR_B = 3+5 = 8, U_B = 5,
-    // ppm 833333 (U_A + U_B = u_max = 6, the Mann–Whitney identity)
-    val tie = Seq((1L, 1L, "A"), (2L, 2L, "A"), (3L, 2L, "A"),
-      (4L, 2L, "B"), (5L, 3L, "B")).toDF("doc_id", "v", "stratum")
-    val got = run(CorpusOps.rankSumAuditAuto(tie, col("stratum"), col("v"),
-      col("doc_id"), maxRowsForWindow = 0))
-    assert(got("A") === ((3L, 7L, 1L, 6L, 166666L)))
-    assert(got("B") === ((2L, 8L, 5L, 6L, 833333L)))
   }
 
   test("AUC audit: hand-computed tied AUC, perfect separation, and the " +

@@ -16,7 +16,7 @@ import org.scalacheck.Prop.forAll
  *  - the doubled rank-sum form `2U = 2ΣR − n(n+1)` is always even on
  *    the window path, so `div 2` is exact (p105/p121's display columns);
  *  - histogram average ranks `(2·cum_before + c + 1)` reproduce the
- *    classical tied rank sum (the rankSumAuditAuto/aucAudit identity).
+ *    classical tied rank sum (aucAudit's identity).
  */
 object ExactIntProps extends Properties("ExactInt") {
 

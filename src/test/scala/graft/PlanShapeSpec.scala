@@ -354,10 +354,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // hole). Current adjudications:
     //  - q6 ×1: the DELIBERATE single-partition ntile teaching variant
     //    (q6b is the production two-level order-statistic path);
-    //  - p105 ×2: the exact-window branch of rankSumAuditAuto, which
-    //    auto-switches to histogram ranks past its 2e9-row bound — the
-    //    flagged window IS the under-bound branch, by design; the count
-    //    is 2 because rankSumFinish instantiates the ranked subtree
+    //  - p105 ×2: rankSumAudit's one global rank window — the declared
+    //    (value, id) total order that makes U exact is a whole-input
+    //    sort by definition, rankSumAudit's documented shape; the count
+    //    is 2 because rankSumAudit instantiates the ranked subtree
     //    twice in one plan (main path + the broadcast totals —
     //    exchange reuse collapses them at execution);
     //  - p35 ×1 / p37 ×2: Lloyd/codebook init windows over the % 50

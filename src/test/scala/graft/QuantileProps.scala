@@ -1,23 +1,24 @@
 package graft
 
 import graft.pipeline.CorpusOps
+import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /**
- * ScalaCheck property for `exactQuantiles`' measured-size branch: the
- * two-level selection (2^16-wide value buckets, then a running sum inside
- * the target bucket) must pick exactly the rows the single-level running
- * sum picks, over random histograms and random quantile sets. Every set
- * carries 4-decimal collisions: next to each random rational sits the
- * rational its rounded q names (1/3 beside 3333/10000), so two requested
- * quantiles share one q with different ranks. Values span negative and
- * positive buckets; counts reach the hundreds, so colliding ranks differ.
+ * ScalaCheck property for `exactQuantiles`: over random raw rows and
+ * random quantile sets, it must pick exactly the rows a driver-side
+ * sort-and-select picks. Rows come from a random histogram, each
+ * (source, v) repeated c times. Every quantile set carries 4-decimal
+ * collisions: next to each random rational sits the rational its
+ * rounded q names (1/3 beside 3333/10000), so two requested quantiles
+ * share one q with different ranks. Values are negative and positive;
+ * counts reach the hundreds, so colliding ranks differ.
  */
 object QuantileProps extends Properties("Quantiles") {
   import TestSpark.spark
   import spark.implicits._
 
-  // each case runs two Spark queries on the shared session
+  // each case runs one Spark query on the shared session
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(25)
 
@@ -37,13 +38,24 @@ object QuantileProps extends Properties("Quantiles") {
   private val quantiles: Gen[Seq[(Int, Int)]] =
     Gen.nonEmptyListOf(colliding).map(qs => (Seq((1, 3), (3333, 10000)) ++ qs.flatten).distinct)
 
-  property("single-level == two-level exact quantiles") =
-    Prop.forAllNoShrink(histogram, quantiles) { (rows, qs) =>
-      val hist = rows.toDF("source", "v", "c")
-      def pick(twoLevel: Boolean) =
-        CorpusOps.exactQuantilesOver(hist, qs, twoLevel).collect().map(_.toSeq).toSet
-      val one = pick(twoLevel = false)
-      Prop(one.nonEmpty && one == pick(twoLevel = true)) :|
-        s"${rows.size} histogram rows, quantiles $qs"
+  property("exact quantiles == driver-side sort-and-select") =
+    Prop.forAllNoShrink(histogram, quantiles) { (hist, qs) =>
+      val raw = hist.flatMap { case (s, v, c) => Seq.fill(c.toInt)((s, v)) }
+      val got = try {
+        CorpusOps.exactQuantiles(raw.toDF("source", "v"), col("source"),
+            col("v"), qs)
+          .collect().map(r => (r.getString(0), r.getAs[Long]("n"),
+            r.getAs[Long]("rank"), r.getAs[Long]("value"))).toSet
+      } finally CacheScope.releaseAll()
+      val replay = raw.groupMap(_._1)(_._2).toSeq.flatMap { case (s, vs) =>
+        val sorted = vs.sorted.toIndexedSeq
+        val n = sorted.length.toLong
+        qs.map { case (num, den) =>
+          val rank = (num * n + den - 1) / den
+          (s, n, rank, sorted(math.max(rank, 1L).toInt - 1))
+        }
+      }.toSet
+      Prop(got.nonEmpty && got == replay) :|
+        s"${raw.size} rows over ${hist.size} (source, v) pairs, quantiles $qs"
     }
 }
